@@ -56,6 +56,13 @@ N_QUERIES = 5      # query set: vec_id < 5 (matches operators/similarity)
 TOP_K = 10
 DELTA_PCT = 80     # knn_index_delta: first 80% of vec_ids = history
 
+# Schemas the index artifacts are written with; read-backs declare them,
+# so a serve call runs no schema-inference job over the stored files.
+# cluster_id is the partition column of the assign* directories.
+_CENTROIDS = "cluster_id int, c array<bigint>, cc bigint"
+_ASSIGN = "vec_id bigint, q array<bigint>, qq bigint, cluster_id int"
+_COMPACTED = _ASSIGN + ", is_delta int"
+
 _Q8_S = "transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 127.0) AS BIGINT))"
 _Q8_D = ("list_transform(embedding, v -> "
          "CAST(floor(CAST(v AS DOUBLE) * 127.0) AS BIGINT))")
@@ -143,7 +150,7 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, scope: str = "full",
         for i in range(k)
     ]
     spark.createDataFrame(
-        cent_rows, "cluster_id int, c array<bigint>, cc bigint"
+        cent_rows, _CENTROIDS
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(base, "centroids"))
     (
         _assign_cells_int8(qv, cent)
@@ -155,8 +162,14 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, scope: str = "full",
     return base
 
 
+def _read_assign(spark: SparkSession, base: str, part: str) -> DataFrame:
+    """One stored cell-assignment directory (``assign``/``assign_delta``)."""
+    return spark.read.schema(_ASSIGN).parquet(os.path.join(base, part))
+
+
 def _load_centroids(spark: SparkSession, base: str) -> "np.ndarray":
-    rows = spark.read.parquet(os.path.join(base, "centroids")) \
+    rows = spark.read.schema(_CENTROIDS) \
+        .parquet(os.path.join(base, "centroids")) \
         .orderBy("cluster_id").collect()
     return np.array([r.c for r in rows], dtype="int64")
 
@@ -170,7 +183,7 @@ def knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by tests/test_annindex.py."""
     base = build_ivf_index(spark, sf_dir, "full")
     cent = _load_centroids(spark, base)
-    assign = spark.read.parquet(os.path.join(base, "assign"))
+    assign = _read_assign(spark, base, "assign")
 
     q_rows = assign.where(F.col("vec_id") < N_QUERIES) \
         .select("vec_id", "q", "qq").collect()
@@ -217,7 +230,7 @@ def knn_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = _load_centroids(spark, base)
     delta_dir = os.path.join(base, "assign_delta")
     if not os.path.isdir(delta_dir):
-        hist_max = spark.read.parquet(os.path.join(base, "assign")) \
+        hist_max = _read_assign(spark, base, "assign") \
             .agg(F.max("vec_id")).collect()[0][0]
         delta = _quantized(spark, sf_dir, "full") \
             .where(F.col("vec_id") > int(hist_max))
@@ -227,8 +240,8 @@ def knn_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite").partitionBy("cluster_id")
             .parquet(delta_dir)
         )
-    hist = spark.read.parquet(os.path.join(base, "assign"))
-    delta = spark.read.parquet(delta_dir)
+    hist = _read_assign(spark, base, "assign")
+    delta = _read_assign(spark, base, "assign_delta")
     merged = hist.selectExpr("vec_id", "cluster_id", "0 AS is_delta") \
         .unionByName(delta.selectExpr("vec_id", "cluster_id", "1 AS is_delta"))
     return merged.groupBy("cluster_id").agg(
@@ -359,8 +372,8 @@ def knn_ivf_delta_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     knn_index_delta(spark, sf_dir)  # ensure history index + delta exist
     base = _INDEX_CACHE[(sf_dir, "hist", PIVF_K)]
     cent = _load_centroids(spark, base)
-    hist = spark.read.parquet(os.path.join(base, "assign"))
-    delta = spark.read.parquet(os.path.join(base, "assign_delta"))
+    hist = _read_assign(spark, base, "assign")
+    delta = _read_assign(spark, base, "assign_delta")
 
     q_rows = hist.where(F.col("vec_id") < N_QUERIES) \
         .select("vec_id", "q", "qq").collect()
@@ -420,8 +433,8 @@ def _compacted_layout(spark: SparkSession, sf_dir: str):
     knn_index_delta(spark, sf_dir)  # ensure history index + delta exist
     base = _INDEX_CACHE[(sf_dir, "hist", PIVF_K)]
     comp_dir = os.path.join(base, "assign_compacted")
-    hist = spark.read.parquet(os.path.join(base, "assign"))
-    delta = spark.read.parquet(os.path.join(base, "assign_delta"))
+    hist = _read_assign(spark, base, "assign")
+    delta = _read_assign(spark, base, "assign_delta")
     merged = (
         hist.select("vec_id", "q", "qq", "cluster_id")
         .withColumn("is_delta", F.lit(0))
@@ -445,10 +458,8 @@ def _compacted_layout(spark: SparkSession, sf_dir: str):
             json.dump({"compacted_cells": cells}, f)
     with open(manifest) as f:
         comp_cells = json.load(f)["compacted_cells"]
-    comp = (spark.read.parquet(comp_dir) if comp_cells
-            else local_literal_df(
-                spark, [], "vec_id bigint, q array<bigint>, qq bigint, "
-                    "cluster_id int, is_delta int"))
+    comp = (spark.read.schema(_COMPACTED).parquet(comp_dir) if comp_cells
+            else local_literal_df(spark, [], _COMPACTED))
     return hist, delta, comp, comp_cells
 
 
@@ -545,7 +556,7 @@ def knn_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     savings to nothing). One aggregation over the K-row occupancy
     rollup; the corpus is touched once."""
     base = build_ivf_index(spark, sf_dir, "full")
-    assign = spark.read.parquet(os.path.join(base, "assign"))
+    assign = _read_assign(spark, base, "assign")
     occ = assign.groupBy("cluster_id").agg(F.count("*").alias("occ"))
     return occ.agg(
         F.count("*").cast("long").alias("n_cells"),

@@ -25,8 +25,7 @@ Additionally, the two PINNED-CONSTANT oracles
 (``knn_recall_report_approx``, ``sketch_rollup_uniques``) are
 build-gated by :func:`pinned_oracle`: on a toolchain that diverges from
 ``PIN_BUILD`` they conditionally degrade to rows-only, with the
-downgrade recorded both on stderr and in the machine-readable
-``scaling_runs/oracle_downgrade.json``.
+downgrade noted on stderr.
 """
 
 from __future__ import annotations
@@ -73,11 +72,9 @@ def pinned_oracle(sql: str) -> str | None:
     (VERDICT r6 item 6): return ``sql`` when the running toolchain
     matches ``PIN_BUILD``; on a toolchain bump return None — the query
     then registers as rows-only (the driver's weaker check), with the
-    downgrade recorded on stderr AND in
-    ``scaling_runs/oracle_downgrade.json`` so the round log can pick it
-    up mechanically, instead of hash-FAILing on phantom drift."""
-    import json
-    import os
+    downgrade noted on stderr, instead of hash-FAILing on phantom drift.
+    Runs at import time of the registering modules, so it touches no
+    files."""
     import sys
 
     import numpy
@@ -85,17 +82,6 @@ def pinned_oracle(sql: str) -> str | None:
 
     current = {"pyspark": pyspark.__version__, "numpy": numpy.__version__}
     if _build_matches(current):
-        # A prior mismatched-toolchain run may have left the downgrade
-        # artifact behind; on a matching build it would keep reporting a
-        # downgrade that is no longer in effect (ADVICE r8) — clear it.
-        try:
-            repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-            stale = os.path.join(repo, "scaling_runs",
-                                 "oracle_downgrade.json")
-            if os.path.exists(stale):
-                os.remove(stale)
-        except OSError:
-            pass  # read-only checkout: the artifact is someone else's copy
         return sql
     print(
         f"[registry] pinned-constant oracle disabled: toolchain {current} "
@@ -104,15 +90,6 @@ def pinned_oracle(sql: str) -> str | None:
         "merge-law tests remain the correctness gates)",
         file=sys.stderr,
     )
-    try:
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        path = os.path.join(repo, "scaling_runs", "oracle_downgrade.json")
-        with open(path, "w") as f:
-            json.dump({"current": current, "pin": PIN_BUILD,
-                       "effect": "pinned-constant oracles degraded to "
-                                 "rows-only"}, f, indent=2)
-    except OSError:
-        pass  # read-only checkout: the stderr note still lands
     return None
 
 

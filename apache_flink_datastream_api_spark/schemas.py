@@ -35,27 +35,55 @@ BROWSER_EVENTS_SCHEMA = T.StructType(
     ]
 )
 
-# Driver testdata `events` table (TESTDATA.md / FIXTURES.md §4) — the
-# stand-in stream table for correctness checks.
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
+# Driver testdata tables (TESTDATA.md / FIXTURES.md §4), one StructType
+# per table in file column order. ``sources.tables.load_table`` reads every
+# table through these (no schema-inference job per load) after checking
+# them against the file footer, and ``streaming.queries`` replays
+# ``events`` through the same one. Timestamp columns are ``TimestampType``:
+# the files store TIMESTAMP(MICROS, isAdjustedToUTC=false), which reads as
+# the same instant under the engine's UTC session time zone.
+_LONG, _INT, _DOUBLE, _STRING, _TS = (
+    T.LongType(), T.IntegerType(), T.DoubleType(), T.StringType(),
+    T.TimestampType(),
 )
 
-TPCH_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-)
 
-ALL_TABLES = TPCH_TABLES + ("events", "documents", "embeddings")
+def _table(*cols: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(n, t) for n, t in cols])
+
+
+TABLE_SCHEMAS: dict[str, T.StructType] = {
+    "region": _table(("r_regionkey", _INT), ("r_name", _STRING)),
+    "nation": _table(
+        ("n_nationkey", _INT), ("n_name", _STRING), ("n_regionkey", _INT)),
+    "customer": _table(
+        ("c_custkey", _LONG), ("c_name", _STRING), ("c_nationkey", _INT),
+        ("c_acctbal", _DOUBLE), ("c_mktsegment", _STRING)),
+    "supplier": _table(
+        ("s_suppkey", _LONG), ("s_name", _STRING), ("s_nationkey", _INT),
+        ("s_acctbal", _DOUBLE)),
+    "part": _table(
+        ("p_partkey", _LONG), ("p_name", _STRING), ("p_brand", _STRING),
+        ("p_type", _STRING), ("p_size", _INT), ("p_retailprice", _DOUBLE)),
+    "orders": _table(
+        ("o_orderkey", _LONG), ("o_custkey", _LONG),
+        ("o_orderstatus", _STRING), ("o_totalprice", _DOUBLE),
+        ("o_orderdate", _TS), ("o_orderpriority", _STRING)),
+    "lineitem": _table(
+        ("l_orderkey", _LONG), ("l_partkey", _LONG), ("l_suppkey", _LONG),
+        ("l_linenumber", _INT), ("l_quantity", _DOUBLE),
+        ("l_extendedprice", _DOUBLE), ("l_discount", _DOUBLE),
+        ("l_tax", _DOUBLE), ("l_returnflag", _STRING),
+        ("l_linestatus", _STRING), ("l_shipdate", _TS)),
+    "events": _table(
+        ("event_id", _LONG), ("ts", _TS), ("user_id", _LONG),
+        ("event_type", _STRING), ("value", _DOUBLE), ("props", _STRING)),
+    "documents": _table(
+        ("doc_id", _LONG), ("text", _STRING), ("lang", _STRING),
+        ("source", _STRING), ("n_chars", _LONG)),
+    "embeddings": _table(
+        ("vec_id", _LONG), ("embedding", T.ArrayType(T.FloatType())),
+        ("label", _INT)),
+}
+
+ALL_TABLES = tuple(TABLE_SCHEMAS)

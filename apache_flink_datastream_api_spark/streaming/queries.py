@@ -21,23 +21,11 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..registry import QuerySpec
-from ..sources.tables import load_table
+from ..sources.tables import (
+    load_table, nanos_to_timestamps, read_schema, set_read_conf, table_path,
+)
 from .sinks import _ephemeral_checkpoint, run_available_now
 from .state import interval_alerts, session_durations
-
-# Streaming file sources require an explicit schema. The driver's
-# events.parquet ts unit has varied across generations (TIMESTAMP(NANOS)
-# vs TIMESTAMP(MICROS)), so detect the physical type from the file footer
-# and build the matching schema instead of hard-coding one.
-def _table_path(sf_dir: str, table: str) -> str:
-    """Path of one parquet file carrying the table's schema — the single
-    file itself, or the first part file of a multi-file table directory
-    (scripts/make_scale.py writes one part per replica)."""
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(src):
-        parts = sorted(p for p in os.listdir(src) if p.endswith(".parquet"))
-        return os.path.join(src, parts[0])
-    return src
 
 
 def _stream_source_dir(sf_dir: str, table: str) -> str:
@@ -50,7 +38,7 @@ def _stream_source_dir(sf_dir: str, table: str) -> str:
     # abspath: a relative sf_dir would otherwise create symlinks that
     # resolve relative to the TEMP dir and dangle (file source sees an
     # empty directory and the replay silently yields zero rows).
-    src = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
+    src = os.path.abspath(table_path(sf_dir, table))
     stream_dir = tempfile.mkdtemp(prefix=f"{table}_stream_")
     if os.path.isdir(src):
         parts = [p for p in sorted(os.listdir(src)) if p.endswith(".parquet")]
@@ -85,29 +73,6 @@ def _stream_source_dir(sf_dir: str, table: str) -> str:
     return stream_dir
 
 
-def _events_stream_schema(sf_dir: str) -> tuple[T.StructType, bool]:
-    """Return (schema, ts_is_long). ts_is_long means the file stores
-    nanos and must be read as long (nanosAsLong) then truncated."""
-    import pyarrow.parquet as pq
-
-    ts_type = str(pq.read_schema(_table_path(sf_dir, "events")).field("ts").type)
-    ts_is_long = ts_type in ("int64", "timestamp[ns]")
-    ts_field = T.LongType() if ts_is_long else T.TimestampNTZType()
-    return (
-        T.StructType(
-            [
-                T.StructField("event_id", T.LongType()),
-                T.StructField("ts", ts_field),
-                T.StructField("user_id", T.LongType()),
-                T.StructField("event_type", T.StringType()),
-                T.StructField("value", T.DoubleType()),
-                T.StructField("props", T.StringType()),
-            ]
-        ),
-        ts_is_long,
-    )
-
-
 def _events_stream(
     spark: SparkSession, sf_dir: str, stream_dir: str | None = None
 ) -> DataFrame:
@@ -115,8 +80,7 @@ def _events_stream(
     ``_stream_source_dir`` call instead of creating a fresh one. Required
     for checkpoint RESUME — the file source's offset log records absolute
     paths, so a restarted query must read the exact same directory."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    set_read_conf(spark)
     # Streaming state stores are partitioned by shuffle.partitions at query
     # start and AQE does NOT coalesce them, so every micro-batch pays a
     # state-store open/commit per partition. Size to STATE VOLUME, not
@@ -126,7 +90,9 @@ def _events_stream(
     target = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
     if int(spark.conf.get("spark.sql.shuffle.partitions", "200")) > target:
         spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    schema, ts_is_long = _events_stream_schema(sf_dir)
+    # Streaming file sources require an explicit schema: the same declared
+    # one the batch path reads with, checked against the footer.
+    schema, nanos = read_schema(sf_dir, "events")
     # One file per micro-batch: a multi-file (time-sliced) events table
     # then replays as successive batches whose watermark advances file
     # by file, so join/window/dedup state is EVICTED between batches
@@ -143,10 +109,7 @@ def _events_stream(
         .format("parquet")
         .load(stream_dir)
     )
-    if ts_is_long:
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    # NTZ -> LTZ under the UTC session tz: same instant, epoch math matches.
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return nanos_to_timestamps(raw, nanos)
 
 
 @contextmanager

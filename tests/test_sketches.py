@@ -108,14 +108,13 @@ def test_hll_rollup_merge_consistent_and_accurate(spark):
         assert abs(rolled[et] - exact[et]) <= max(2, 0.05 * exact[et])
 
 
-def test_pinned_oracle_build_guard():
+def test_pinned_oracle_build_guard(capsys):
     """Pinned-constant oracles degrade to rows-only (None) on a toolchain
     bump instead of hash-FAILing on phantom drift (VERDICT r6 item 6);
     on the recorded build they pass through unchanged. r8 (ADVICE): a
-    numpy PATCH bump keeps the oracle (match on major.minor), and a real
-    downgrade is recorded in a machine-readable artifact — which this
-    test removes afterwards, since ITS downgrade is simulated."""
-    import json
+    numpy PATCH bump keeps the oracle (match on major.minor). A real
+    downgrade is noted on stderr only: the guard runs when the registry
+    is imported, so it must create or delete no files."""
     import os
     from unittest import mock
 
@@ -136,26 +135,14 @@ def test_pinned_oracle_build_guard():
         np_patch_bump = PIN_BUILD["numpy"].rsplit(".", 1)[0] + ".999"
         with mock.patch.object(numpy, "__version__", np_patch_bump):
             assert pinned_oracle("SELECT 1") == "SELECT 1"
-    art = os.path.join(
+        assert capsys.readouterr().err == ""
+    runs = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "scaling_runs", "oracle_downgrade.json")
-    # On a toolchain that GENUINELY diverges from PIN_BUILD a real
-    # downgrade artifact exists (written at import time) — snapshot it and
-    # restore in a finally, so neither the simulated artifact below nor a
-    # mid-test assert failure can clobber or fake the real record
-    # (ADVICE r8).
-    pre_existing = None
-    if os.path.exists(art):
-        with open(art) as f:
-            pre_existing = f.read()
-    try:
-        with mock.patch.object(numpy, "__version__", "999.0.0"):
-            assert pinned_oracle("SELECT 1") is None
-        with open(art) as f:
-            assert json.load(f)["current"]["numpy"] == "999.0.0"
-    finally:
-        if pre_existing is not None:
-            with open(art, "w") as f:
-                f.write(pre_existing)
-        elif os.path.exists(art):
-            os.remove(art)  # simulated downgrade must not masquerade as real
+        "scaling_runs")
+    before = sorted(os.listdir(runs))
+    with mock.patch.object(numpy, "__version__", "999.0.0"):
+        assert pinned_oracle("SELECT 1") is None
+    err = capsys.readouterr().err
+    assert "pinned-constant oracle disabled" in err
+    assert "'numpy': '999.0.0'" in err
+    assert sorted(os.listdir(runs)) == before

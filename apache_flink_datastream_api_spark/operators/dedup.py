@@ -1094,8 +1094,7 @@ def dedup_family_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (guide-§2.6 back-fill: each family's straggler tail is filled by
     # the next family's tasks instead of idling the box; Spark schedules
     # concurrent jobs FIFO within one session). Measured at sf0.1
-    # isolated: 6.9 s serial -> see OPTIMIZATION_r09.md. Thread-safe:
-    # none of the families mutates session conf or the catalog.
+    # isolated: 6.9 s serial -> see OPTIMIZATION_r09.md.
     # InheritableThread (ADVICE r9): plain executor threads in pinned-
     # thread mode do NOT inherit the caller's Spark local properties
     # (job group/description/tags), so harness-level job attribution or
@@ -1108,12 +1107,12 @@ def dedup_family_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a", "doc_b").localCheckpoint(eager=True)
 
     results: dict[str, DataFrame] = {}
-    errors: list[BaseException] = []
+    errors: list[Exception] = []
 
     def _run(name, fam):
         try:
             results[name] = _pairs(fam)
-        except BaseException as e:  # propagate to the caller thread
+        except Exception as e:  # propagate to the caller thread
             errors.append(e)
 
     threads = [
@@ -1126,8 +1125,11 @@ def dedup_family_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.start()
     for t in threads:
         t.join()
-    if errors:
+    if len(errors) == 1:
         raise errors[0]
+    if errors:
+        raise ExceptionGroup(
+            f"dedup_family_overlap: {len(errors)} families failed", errors)
     mh, pf, nb = results["mh"], results["pf"], results["nb"]
     keys = mh.unionAll(pf).unionAll(nb).distinct()
 

@@ -43,7 +43,9 @@ from pyspark.sql.types import (
 )
 
 from .fixtures import BASE_TS, ENTITIES, OPERATIONS, USERS
-from ..streaming.sinks import _ephemeral_checkpoint
+from ..streaming.sinks import (
+    _ephemeral_checkpoint, start_stream, take_memory_sink,
+)
 
 _A, _C, _M = 1103515245, 12345, 2**31
 
@@ -417,9 +419,6 @@ def register_sink(spark: SparkSession) -> None:
 # The oracle regenerates the LCG stream in pure SQL, so the custom source
 # is hash-checked end-to-end (not rows-only).
 
-import os  # noqa: E402
-from contextlib import contextmanager  # noqa: E402
-
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 from ..registry import QuerySpec  # noqa: E402
@@ -438,25 +437,6 @@ WITH r AS (
   FROM generate_series(0, {n - 1}) t(i)
 )
 """
-
-
-@contextmanager
-def _stream_shuffle_partitions(spark: SparkSession, default: str = "4"):
-    """Pin shuffle partitions (= streaming state-store instances per
-    stateful operator) for the duration of a bounded drain, restoring
-    the session conf afterwards. The generator drains aggregate a few
-    thousand rows per micro-batch, and each batch pays a state-store
-    open/commit PER PARTITION: at 32 session partitions the 4-batch
-    simple-stream drain spends 5+ s on store bookkeeping, at 4 it runs
-    in ~2.4 s (measured r8, sf-independent). A real deployment sizes
-    via SPARK_GRAFT_STREAM_PARTITIONS, which takes precedence."""
-    target = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", default)
-    prev = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    spark.conf.set("spark.sql.shuffle.partitions", target)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _gen_agg(df: DataFrame) -> DataFrame:
@@ -496,39 +476,36 @@ def s3_generator_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3 as a micro-batch stream: offset-tracked generation drained over
     several real micro-batches, complete-mode aggregation (batching-
     invariant final table == batch oracle)."""
-    import tempfile
     import uuid
 
     register(spark)
     n = 3000
-    with _stream_shuffle_partitions(spark):
-        stream = (
-            spark.readStream.format("audit_trail_gen")
-            .option("numRows", n)
-            .option("rowsPerBatch", 1000)
-            .load()
-        )
-        agg = _gen_agg(stream)
-        name = f"gen_{uuid.uuid4().hex[:12]}"
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _ephemeral_checkpoint())
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        try:
-            # Drain to completion between batches (no mid-epoch stop, no
-            # per-poll collect job — the old loop ran a driver collect
-            # every 0.1 s while the stream drained).
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        done = spark.table(name).agg(F.sum("cnt")).collect()[0][0]
-        if done != n:
-            raise RuntimeError(f"generator stream drained {done}/{n} rows")
-    return spark.table(name)
+    stream = (
+        spark.readStream.format("audit_trail_gen")
+        .option("numRows", n)
+        .option("rowsPerBatch", 1000)
+        .load()
+    )
+    name = f"gen_{uuid.uuid4().hex[:12]}"
+    q = start_stream(
+        _gen_agg(stream).writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", _ephemeral_checkpoint())
+        .trigger(processingTime="0 seconds"),
+        spark, cap=4)
+    try:
+        # Drain to completion between batches (no mid-epoch stop, no
+        # per-poll collect job — the old loop ran a driver collect
+        # every 0.1 s while the stream drained).
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    out = take_memory_sink(spark, name)
+    done = out.agg(F.sum("cnt")).collect()[0][0]
+    if done != n:
+        raise RuntimeError(f"generator stream drained {done}/{n} rows")
+    return out
 
 
 def s3_generator_simple_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -539,31 +516,29 @@ def s3_generator_simple_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register(spark)
     n = 2000
-    with _stream_shuffle_partitions(spark):
-        stream = (
-            spark.readStream.format("audit_trail_gen_simple")
-            .option("numRows", n)
-            .option("rowsPerBatch", 500)
-            .load()
-        )
-        agg = _gen_agg(stream)
-        name = f"gens_{uuid.uuid4().hex[:12]}"
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _ephemeral_checkpoint())
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        done = spark.table(name).agg(F.sum("cnt")).collect()[0][0]
-        if done != n:
-            raise RuntimeError(f"simple stream drained {done}/{n} rows")
-    return spark.table(name)
+    stream = (
+        spark.readStream.format("audit_trail_gen_simple")
+        .option("numRows", n)
+        .option("rowsPerBatch", 500)
+        .load()
+    )
+    name = f"gens_{uuid.uuid4().hex[:12]}"
+    q = start_stream(
+        _gen_agg(stream).writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", _ephemeral_checkpoint())
+        .trigger(processingTime="0 seconds"),
+        spark, cap=4)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    out = take_memory_sink(spark, name)
+    done = out.agg(F.sum("cnt")).collect()[0][0]
+    if done != n:
+        raise RuntimeError(f"simple stream drained {done}/{n} rows")
+    return out
 
 
 def k5_python_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -627,13 +602,12 @@ def k6_python_stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
         # the Python stream source's availableNow end-offset is computed
         # once, which would collapse the capped generator to one batch —
         # this query exists to exercise the MULTI-batch commit ledger).
-        q = (
+        q = start_stream(
             stream.writeStream.format("audit_trail_sink")
             .option("path", d)
             .option("checkpointLocation", _ephemeral_checkpoint())
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
+            .trigger(processingTime="0 seconds"),
+            spark)
         try:
             # Block until every available offset is COMMITTED (the
             # driver-side sink commit — rename + ledger marker — is part

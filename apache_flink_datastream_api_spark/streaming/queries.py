@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import os
 import tempfile
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -24,7 +23,9 @@ from ..registry import QuerySpec
 from ..sources.tables import (
     load_table, nanos_to_timestamps, read_schema, set_read_conf, table_path,
 )
-from .sinks import _ephemeral_checkpoint, run_available_now
+from .sinks import (
+    _ephemeral_checkpoint, run_available_now, start_stream, take_memory_sink,
+)
 from .state import interval_alerts, session_durations
 
 
@@ -73,26 +74,31 @@ def _stream_source_dir(sf_dir: str, table: str) -> str:
     return stream_dir
 
 
+def _table_stream(
+    spark: SparkSession, sf_dir: str, table: str,
+    stream_dir: str | None = None, **options,
+) -> DataFrame:
+    """Stream testdata ``table`` through its declared schema — the one
+    the batch path reads with, checked against the footer (streaming file
+    sources require an explicit schema). ``stream_dir``: reuse an existing
+    symlink dir from a prior ``_stream_source_dir`` call instead of
+    creating a fresh one. Required for checkpoint RESUME — the file
+    source's offset log records absolute paths, so a restarted query must
+    read the exact same directory."""
+    set_read_conf(spark)
+    schema, nanos = read_schema(sf_dir, table)
+    if stream_dir is None:
+        stream_dir = _stream_source_dir(sf_dir, table)
+    raw = (
+        spark.readStream.schema(schema).options(**options)
+        .format("parquet").load(stream_dir)
+    )
+    return nanos_to_timestamps(raw, nanos)
+
+
 def _events_stream(
     spark: SparkSession, sf_dir: str, stream_dir: str | None = None
 ) -> DataFrame:
-    """``stream_dir``: reuse an existing symlink dir from a prior
-    ``_stream_source_dir`` call instead of creating a fresh one. Required
-    for checkpoint RESUME — the file source's offset log records absolute
-    paths, so a restarted query must read the exact same directory."""
-    set_read_conf(spark)
-    # Streaming state stores are partitioned by shuffle.partitions at query
-    # start and AQE does NOT coalesce them, so every micro-batch pays a
-    # state-store open/commit per partition. Size to STATE VOLUME, not
-    # cores: at demo scale (10k keys) 8 partitions beat 32 by ~2.5x in
-    # wall clock; on a cluster carrying TBs of state, set
-    # SPARK_GRAFT_STREAM_PARTITIONS to the total executor-core count.
-    target = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    if int(spark.conf.get("spark.sql.shuffle.partitions", "200")) > target:
-        spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    # Streaming file sources require an explicit schema: the same declared
-    # one the batch path reads with, checked against the footer.
-    schema, nanos = read_schema(sf_dir, "events")
     # One file per micro-batch: a multi-file (time-sliced) events table
     # then replays as successive batches whose watermark advances file
     # by file, so join/window/dedup state is EVICTED between batches
@@ -100,42 +106,8 @@ def _events_stream(
     # the watermark-bounded-state contract executed, not just claimed.
     # (At the driver scales events is a single file: one batch, exactly
     # the behavior every oracle was validated against.)
-    if stream_dir is None:
-        stream_dir = _stream_source_dir(sf_dir, "events")
-    max_files = os.environ.get("SPARK_GRAFT_STREAM_MAX_FILES", "1")
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files)
-        .format("parquet")
-        .load(stream_dir)
-    )
-    return nanos_to_timestamps(raw, nanos)
-
-
-@contextmanager
-def _chain_partitions(spark: SparkSession, default: str = "4"):
-    """Size state partitions to a MULTI-STORE operator chain for the
-    duration of a bounded drain (the r8 j3_first_touch finding, applied
-    r9 to every 2+-store chain): each micro-batch pays a state-store
-    open/commit per store per shuffle partition, so chains multiply the
-    per-batch floor and want fewer, larger partitions than the
-    single-store default of 8 (measured at sf0.1, alternating A/B:
-    j3_threeway 4.8->4.0 s, w6 1.8->1.5 s, x8_neardup 3.1->2.7 s at 4
-    vs 8; the single-store x4 family is FASTER at 8 and keeps it; 2 was
-    re-measured r10 and wins only for the FIVE-store j3_first_touch).
-    SPARK_GRAFT_STREAM_PARTITIONS takes precedence as everywhere;
-    the session value is restored so later queries are unaffected.
-    SERIAL-ONLY (ADVICE r9): this mutates the session-global
-    shuffle.partitions — two streaming drains must not run concurrently
-    in one session (the bench and driver sim run queries serially;
-    dedup_family_overlap's concurrent jobs are batch-only)."""
-    target = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", default)
-    prev = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    spark.conf.set("spark.sql.shuffle.partitions", target)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return _table_stream(
+        spark, sf_dir, "events", stream_dir, maxFilesPerTrigger=1)
 
 
 # --- W2/T2: event-time windowed aggregation through the streaming engine ---
@@ -778,8 +750,7 @@ def j2_join_then_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_millis("w.start").alias("window_start_ms"), "n_conversions"
         )
     )
-    with _chain_partitions(spark):  # join + window stores
-        return run_available_now(agg, spark, mode="append")
+    return run_available_now(agg, spark, mode="append", cap=4)
 
 
 J2_JOIN_WINDOW_ORACLE = """
@@ -868,8 +839,7 @@ def w6_chained_windows_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total",
         )
     )
-    with _chain_partitions(spark):  # two chained window stores
-        return run_available_now(second, spark, mode="append")
+    return run_available_now(second, spark, mode="append", cap=4)
 
 
 W6_CHAINED_ORACLE = f"""
@@ -897,7 +867,6 @@ def s3_stateful_alert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     straddle them. Oracle: the LCG stream is regenerated in SQL and the
     alert logic replayed as lag(); the whole streaming pipeline, source
     included, is hash-checked."""
-    import tempfile as _tf
     import time as _time
     import uuid as _uuid
 
@@ -917,14 +886,13 @@ def s3_stateful_alert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         deletes, S3_X1_THRESH_MS, key_col="gen_user", ts_ms_col="ts_ms"
     )
     name = f"s3x1_{_uuid.uuid4().hex[:12]}"
-    q = (
+    q = start_stream(
         alerts.writeStream.outputMode("update")
         .format("memory")
         .queryName(name)
         .option("checkpointLocation", _ephemeral_checkpoint())
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
+        .trigger(processingTime="0 seconds"),
+        spark)
     try:
         deadline = _time.monotonic() + 180
         while _time.monotonic() < deadline:
@@ -937,7 +905,7 @@ def s3_stateful_alert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise TimeoutError("generator alert stream did not drain")
     finally:
         q.stop()
-    return spark.table(name)
+    return take_memory_sink(spark, name)
 
 
 def _s3_x1_oracle() -> str:
@@ -966,24 +934,19 @@ def statestore_read_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     is oracle-checkable: state correctness, not just query output
     correctness. At scale this reads the HDFS/RocksDB store files
     directly, partition-parallel, without touching a live query."""
-    import tempfile as _tf
-    import uuid as _uuid
-
     stream = _events_stream(spark, sf_dir)
     agg = stream.groupBy("user_id").agg(
         F.count("*").alias("cnt"),
         F.sum(F.col("value").cast("decimal(18,4)")).alias("sv"),
     )
     ckpt = _ephemeral_checkpoint()
-    name = f"ss_{_uuid.uuid4().hex[:12]}"
-    q = (
+    # noop sink: the answer is the state in the checkpoint, not the output
+    q = start_stream(
         agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
+        .format("noop")
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+        .trigger(availableNow=True),
+        spark)
     q.awaitTermination(300)
     state = spark.read.format("statestore").option("path", ckpt).load()
     return state.select(
@@ -1448,9 +1411,8 @@ def j3_threeway_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     match the batch truth exactly, so the oracle is one 3-way SQL join.
     Hops are 24 h with 25 h watermarks (event density at test scale makes
     10-minute chains vanish; the state bound scales with the interval)."""
-    with _chain_partitions(spark):  # 2 join stores: see _chain_partitions
-        return run_available_now(
-            j3_pipeline(spark, sf_dir), spark, mode="append")
+    return run_available_now(
+        j3_pipeline(spark, sf_dir), spark, mode="append", cap=4)
 
 
 def j3_pipeline(
@@ -1574,24 +1536,10 @@ def j3_first_touch_pipeline(
 
 
 def j3_first_touch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # This chain carries FIVE state stores (3 window aggs + 2 joins), and
-    # every micro-batch pays a store open/commit per store per shuffle
-    # partition — the per-batch floor is 5x a single-agg query's. At the
-    # demo state volume 4 partitions halve wall-clock vs the 8 the other
-    # stream queries use (measured r8: 5.2 s vs 10.4 s at sf0.1), and 2
-    # shaves the floor further (r10, 5/5 alternating isolated pairs at
-    # sf0.1: 5.30/5.73/5.86 -> 4.87/4.92/5.14 min legs, ~-8-14%); a real
-    # deployment sizes via SPARK_GRAFT_STREAM_PARTITIONS as usual, which
-    # takes precedence here too. Conf is restored after the bounded run
-    # so later queries in the session are unaffected.
-    target = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "2")
-    prev = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    spark.conf.set("spark.sql.shuffle.partitions", target)
-    try:
-        return run_available_now(
-            j3_first_touch_pipeline(spark, sf_dir), spark, mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    # FIVE state stores (3 window aggs + 2 joins): 2 partitions, the
+    # measured optimum for this chain (see start_stream).
+    return run_available_now(
+        j3_first_touch_pipeline(spark, sf_dir), spark, mode="append", cap=2)
 
 
 # Append emission: a window's firsts (and hence its joined row) flush
@@ -1701,27 +1649,11 @@ SPECS += [
 # key set is — and that set is exactly batch DISTINCT, which the oracle
 # checks.
 
-def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    target = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    if int(spark.conf.get("spark.sql.shuffle.partitions", "200")) > target:
-        spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    stream_dir = _stream_source_dir(sf_dir, "documents")
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ])
-    return spark.readStream.schema(schema).format("parquet").load(stream_dir)
-
-
 def x8_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import text as XT
     from ..operators.dedup import _FP_K
 
-    stream = _documents_stream(spark, sf_dir)
+    stream = _table_stream(spark, sf_dir, "documents")
     toked = stream.selectExpr(
         "doc_id", "text", f"{XT.tokens_spark('text')} AS toks")
     sh = XT.shingles_spark("toks", _FP_K)
@@ -1869,10 +1801,9 @@ def x8_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signature fold, and fewer state partitions cut the former without
     # starving the latter (the fold parallelism follows the SOURCE split,
     # not shuffle.partitions).
-    with _chain_partitions(spark):
-        out = run_available_now(
-            neardup_bucket_state(_documents_stream(spark, sf_dir)), spark,
-            mode="update")
+    stream = _table_stream(spark, sf_dir, "documents")
+    out = run_available_now(
+        neardup_bucket_state(stream), spark, mode="update", cap=4)
     # The verdict-side membership relation: in production this is the
     # band-row table the ingest PERSISTED (stateless append, like x13's
     # vector-cell assignments); recomputed here from the same files.
@@ -1935,17 +1866,7 @@ def x13_index_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = build_ivf_index(spark, sf_dir, "full")
     cent = _load_centroids(spark, base)
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    target = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    if int(spark.conf.get("spark.sql.shuffle.partitions", "200")) > target:
-        spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    stream_dir = _stream_source_dir(sf_dir, "embeddings")
-    schema = T.StructType([
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ])
-    stream = spark.readStream.schema(schema).format("parquet").load(stream_dir)
+    stream = _table_stream(spark, sf_dir, "embeddings")
     assigned = _assign_cells_int8(
         stream.selectExpr("vec_id", f"{_Q8_S} AS q"), cent)
     counts = assigned.groupBy("cluster_id").agg(F.count("*").alias("cnt"))

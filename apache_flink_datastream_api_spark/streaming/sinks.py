@@ -9,16 +9,20 @@ Semantics notes vs the reference:
   or transactional downstream — documented gap, not hidden.
 - ``run_available_now`` is the bounded-replay harness: process everything
   available, then stop — the batch-equivalence bridge used by tests and
-  the oracle-checked streaming queries.
+  the oracle-checked streaming queries. Every bounded drain starts
+  through ``start_stream``, which fixes its state partitions; the
+  long-running sinks here keep the session's value (deployment sizing).
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 
 def to_console(df: DataFrame, mode: str = "append"):
@@ -132,29 +136,79 @@ def _record_state_metrics(q) -> None:
         pass
 
 
+_START_LOCK = threading.Lock()
+
+
+def start_stream(
+    writer: DataStreamWriter, spark: SparkSession, cap: int = 8
+) -> StreamingQuery:
+    """Start a bounded drain with its state partitions fixed at start.
+
+    State stores are partitioned by ``spark.sql.shuffle.partitions`` when
+    the query starts (recorded in its offset log; AQE never coalesces
+    them), and every micro-batch pays a store open/commit per store per
+    partition, so demo-scale state wants fewer partitions than batch
+    work. The count is ``SPARK_GRAFT_STREAM_PARTITIONS`` when set (the
+    deployment's choice, e.g. the executor-core count for TBs of state),
+    else ``min(session value, cap)``. Caps, measured at sf0.1:
+
+    - 8 (default), single store: at 10k keys 8 beat 32 by ~2.5x; the x4
+      family is faster at 8 than at 4.
+    - 4, multi-store chains (j2, w6, j3_threeway) and x8_neardup, whose
+      floor is store commits plus a map-side fold that follows the
+      source split (alternating A/B, 4 vs 8: j3_threeway 4.8->4.0 s,
+      w6 1.8->1.5 s, x8_neardup 3.1->2.7 s); the generator drains
+      (~2.4 s at 4 vs 5+ s of store bookkeeping at 32).
+    - 2, the five-store j3_first_touch: 4 halved it vs 8 (5.2 vs
+      10.4 s), 2 cut a further 8-14% (5/5 alternating isolated pairs).
+
+    The value is set only around ``writer.start()``: the query clones
+    the session there (``StreamExecution``) and keeps ``n`` for life,
+    while the session is restored before this returns. The lock
+    serialises concurrent starts."""
+    key = "spark.sql.shuffle.partitions"
+    env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
+    with _START_LOCK:
+        prev = spark.conf.get(key)
+        n = int(env) if env else min(int(prev), cap)
+        spark.conf.set(key, str(n))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(key, prev)
+
+
+def take_memory_sink(spark: SparkSession, name: str) -> DataFrame:
+    """Materialize a stopped memory sink's table and drop it from the
+    catalog. Without this, every bounded replay leaks its full result set
+    into the session catalog for the session's lifetime — in a long
+    session (bench: hundreds of streaming runs) the accumulated tables
+    GC-pressure the JVM until streaming runs take 5-10x longer.
+    localCheckpoint blocks are freed by the ContextCleaner once the
+    returned DataFrame is unreferenced."""
+    out = spark.table(name).localCheckpoint(eager=True)
+    spark.catalog.dropTempView(name)
+    return out
+
+
 def run_available_now(
-    df: DataFrame, spark: SparkSession, mode: str = "update", timeout_s: int = 300
+    df: DataFrame,
+    spark: SparkSession,
+    mode: str = "update",
+    timeout_s: int = 300,
+    cap: int = 8,
 ) -> DataFrame:
     """Run a streaming DataFrame to completion on available data and return
-    the collected result as a batch DataFrame (memory sink)."""
+    the collected result as a batch DataFrame (memory sink). ``cap``
+    bounds the state partitions (see :func:`start_stream`)."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    q = (
+    q = start_stream(
         df.writeStream.outputMode(mode)
         .format("memory")
         .queryName(name)
         .option("checkpointLocation", _ephemeral_checkpoint())
-        .trigger(availableNow=True)
-        .start()
-    )
+        .trigger(availableNow=True),
+        spark, cap)
     q.awaitTermination(timeout_s)
     _record_state_metrics(q)
-    # Materialize the result OUT of the memory sink's named table, then
-    # drop the table. Without this, every bounded replay leaks its full
-    # result set into the session catalog for the session's lifetime —
-    # in a long session (bench: hundreds of streaming runs) the
-    # accumulated tables GC-pressure the JVM until streaming runs take
-    # 5-10x longer. localCheckpoint blocks are freed by the
-    # ContextCleaner once the returned DataFrame is unreferenced.
-    out = spark.table(name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    return out
+    return take_memory_sink(spark, name)

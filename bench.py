@@ -700,22 +700,11 @@ def main() -> None:
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "")
     subset = [n for n in only.split(",") if n] if only else None
 
-    # Order-independence (r8 adjudication finding): the streaming queries
-    # lower the SESSION's shuffle.partitions to their state-store target
-    # and a bounded drain has no natural point to restore it, so in a full
-    # run every batch query after the first streaming one was silently
-    # measured at 8 partitions — its budget then depended on HEADLINE
-    # order and could not reproduce in an isolated JVM (graph_modularity:
-    # 3.37 s at 8 parts vs 3.87 s at 32). Reset before every query so a
-    # budget means the same thing in-session and in isolation.
-    base_parts = spark.conf.get("spark.sql.shuffle.partitions", "32")
-
     times: dict[str, float] = {}
     loadavg_by_query: dict[str, float] = {}
     for name in subset if subset is not None else HEADLINE:
         # progress marker so a crash mid-run is attributable to a query
         print(f"[bench] {name}", file=sys.stderr, flush=True)
-        spark.conf.set("spark.sql.shuffle.partitions", base_parts)
         # Drop the PREVIOUS query's cached plans. Every _pin()/persist()
         # a query makes is dead weight once the next query starts (plans
         # never match across queries), and over ~330 queries the

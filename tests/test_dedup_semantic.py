@@ -11,11 +11,16 @@ embeddings table:
    cos >= SEM_TAU (nothing is dropped without cause);
 3. the per-bucket accounting is consistent (n_vecs = n_kept + dropped,
    kept_id_sum equals the sum of the surviving ids).
+
+The last test pins dedup_family_overlap's error propagation from its
+concurrent family threads.
 """
 
 from __future__ import annotations
 
 import math
+
+import pytest
 
 from tests.conftest import SF_DIR
 
@@ -173,3 +178,32 @@ def test_semdedup_ivf_accounting_matches_engine(spark):
         assert got[c].n_vecs == len(ids)
         assert got[c].n_kept == len(kept_ids)
         assert got[c].kept_id_sum == sum(kept_ids)
+
+
+def test_family_overlap_reports_every_failed_family(spark, monkeypatch):
+    """Two of the three concurrently run families fail: both errors reach
+    the caller, none is dropped."""
+    import pytest
+
+    from apache_flink_datastream_api_spark.operators import dedup
+
+    def _fails(msg):
+        def fam(spark, sf_dir, shingled):
+            raise ValueError(msg)
+        return fam
+
+    def _ok(spark, sf_dir, shingled):
+        return spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
+
+    monkeypatch.setattr(dedup, "dedup_minhash_lsh", _fails("minhash down"))
+    monkeypatch.setattr(dedup, "dedup_ngram_jaccard", _fails("blocked down"))
+    monkeypatch.setattr(dedup, "dedup_prefix_filter_join", _ok)
+    with pytest.raises(ExceptionGroup) as ei:
+        dedup.dedup_family_overlap(spark, SF_DIR)
+    assert sorted(str(e) for e in ei.value.exceptions) == [
+        "blocked down", "minhash down"]
+
+    # a single failure is raised as itself
+    monkeypatch.setattr(dedup, "dedup_ngram_jaccard", _ok)
+    with pytest.raises(ValueError, match="minhash down"):
+        dedup.dedup_family_overlap(spark, SF_DIR)

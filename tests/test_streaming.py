@@ -1530,3 +1530,104 @@ def test_j3_first_touch_kill_and_resume_mid_replay(spark, tmp_path, provider):
 
     got_df = s.read.parquet(out)
     assert sorted(tuple(r) for r in got_df.select(*cols).collect()) == want
+
+
+# --- bounded drains fix their state partitions at query start ----------------
+
+# query -> state partitions it must start with under a 16-partition session
+DRAIN_PARTITIONS = {
+    "w2_eventtime_stream": 8,
+    "x8_neardup_stream": 4,
+    "j3_first_touch_stream": 2,
+    "x13_index_ingest_stream": 8,
+    "s3_generator_stream": 4,
+    "statestore_read_agg": 8,
+}
+
+
+@pytest.fixture
+def started(spark, monkeypatch):
+    """Session at 16 shuffle partitions; collects every query started."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    queries = []
+    real_start = DataStreamWriter.start
+
+    def _start(self, *args, **kwargs):
+        q = real_start(self, *args, **kwargs)
+        queries.append(q)
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", _start)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    yield queries
+    spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _run_query(spark, name):
+    from apache_flink_datastream_api_spark.registry import all_queries
+
+    return all_queries()[name].fn(spark, SF_DIR).collect()
+
+
+def _state_partitions(queries) -> set[int]:
+    return {
+        so["numShufflePartitions"]
+        for q in queries
+        for p in q.recentProgress
+        for so in p["stateOperators"]
+    }
+
+
+@pytest.mark.parametrize("name", sorted(DRAIN_PARTITIONS))
+def test_drain_state_partitions_fixed_at_start(spark, started, name):
+    """Each bounded drain's state stores get min(session, cap) partitions,
+    and the session reads its own value afterwards: no query leaves
+    shuffle.partitions changed for the batch work that follows."""
+    _run_query(spark, name)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "16"
+    assert started, f"{name} started no streaming query"
+    assert _state_partitions(started) == {DRAIN_PARTITIONS[name]}
+
+
+@pytest.mark.parametrize("name", ["w2_eventtime_stream", "j3_first_touch_stream"])
+def test_stream_partitions_env_is_used_exactly(spark, started, monkeypatch, name):
+    """SPARK_GRAFT_STREAM_PARTITIONS is the deployment's explicit choice:
+    used as is, above a query's cap (j3_first_touch: 2) or below it
+    (w2: 8)."""
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "3")
+    _run_query(spark, name)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "16"
+    assert _state_partitions(started) == {3}
+
+
+@pytest.mark.parametrize("name", [
+    "s3_generator_stream", "s3_generator_simple_stream",
+    "s3_stateful_alert_stream",
+])
+def test_generator_drains_drop_their_memory_sink(spark, name):
+    """A drain's memory-sink table is materialized and dropped: repeated
+    calls in one long session leave nothing in the catalog."""
+    before = {t.name for t in spark.catalog.listTables()}
+    assert _run_query(spark, name)
+    assert {t.name for t in spark.catalog.listTables()} == before
+
+
+@pytest.mark.parametrize("table, old, new", [
+    ("documents", "text", "body"), ("embeddings", "embedding", "vector"),
+])
+def test_table_stream_names_a_renamed_column(spark, tmp_path, table, old, new):
+    """The documents and embeddings streams read through the declared
+    schema: a renamed column fails naming it instead of streaming nulls."""
+    import pyarrow.parquet as pq
+
+    from apache_flink_datastream_api_spark.sources.tables import table_path
+    from apache_flink_datastream_api_spark.streaming.queries import _table_stream
+
+    t = pq.read_table(table_path(SF_DIR, table))
+    pq.write_table(
+        t.rename_columns([new if c == old else c for c in t.column_names]),
+        str(tmp_path / f"{table}.parquet"))
+    with pytest.raises(ValueError, match=f"'{old}'.*'{new}'"):
+        _table_stream(spark, str(tmp_path), table)

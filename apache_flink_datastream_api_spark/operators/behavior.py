@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..registry import QuerySpec
-from ..sources.tables import load_table
+from ..sources.tables import load_table, temp_view
 
 SPECS: list[QuerySpec] = []
 
@@ -311,19 +311,19 @@ def q_reachable_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("event_type").alias("src"), F.col("next_type").alias("dst"))
         .distinct()
     )
-    edges.localCheckpoint(eager=True).createOrReplaceTempView("_behavior_edges")
-    return spark.sql(
-        f"""
-        WITH RECURSIVE r(t, d) AS (
-          SELECT 'signup', 0
-          UNION ALL
-          SELECT e.dst, r.d + 1
-          FROM _behavior_edges e JOIN r ON e.src = r.t
-          WHERE r.d < {MAX_HOPS}
+    with temp_view(edges.localCheckpoint(eager=True), "_behavior_edges") as view:
+        return spark.sql(
+            f"""
+            WITH RECURSIVE r(t, d) AS (
+              SELECT 'signup', 0
+              UNION ALL
+              SELECT e.dst, r.d + 1
+              FROM {view} e JOIN r ON e.src = r.t
+              WHERE r.d < {MAX_HOPS}
+            )
+            SELECT t AS event_type, MIN(d) AS hops FROM r GROUP BY t
+            """
         )
-        SELECT t AS event_type, MIN(d) AS hops FROM r GROUP BY t
-        """
-    )
 
 
 Q_REACHABLE_ORACLE = f"""
@@ -352,22 +352,22 @@ SELECT t AS event_type, MIN(d) AS hops FROM (
 # key, not |nation| probes.
 
 def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("_behavior_cust")
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("_behavior_nation")
-    return spark.sql(
-        """
-        SELECT n.n_name, l.c_custkey,
-               CAST(round(l.c_acctbal * 100) AS BIGINT) AS acctbal_cents
-        FROM _behavior_nation n,
-        LATERAL (
-          SELECT c_custkey, c_acctbal
-          FROM _behavior_cust c
-          WHERE c.c_nationkey = n.n_nationkey
-          ORDER BY c_acctbal DESC, c_custkey
-          LIMIT 2
-        ) l
-        """
-    )
+    with temp_view(load_table(spark, sf_dir, "customer"), "_behavior_cust") as cust, \
+            temp_view(load_table(spark, sf_dir, "nation"), "_behavior_nation") as nation:
+        return spark.sql(
+            f"""
+            SELECT n.n_name, l.c_custkey,
+                   CAST(round(l.c_acctbal * 100) AS BIGINT) AS acctbal_cents
+            FROM {nation} n,
+            LATERAL (
+              SELECT c_custkey, c_acctbal
+              FROM {cust} c
+              WHERE c.c_nationkey = n.n_nationkey
+              ORDER BY c_acctbal DESC, c_custkey
+              LIMIT 2
+            ) l
+            """
+        )
 
 
 Q_LATERAL_ORACLE = """

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..registry import QuerySpec
-from ..sources.tables import load_table
+from ..sources.tables import load_table, temp_view
 
 
 def _dec(col: str, prec: int = 18, scale: int = 2):
@@ -914,21 +914,21 @@ def q_above_nation_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL with a correlated scalar subquery to exercise the spark.sql()
     entry path and Catalyst's decorrelation (it rewrites the subquery into
     one aggregate + join, not a per-row loop)."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
     # avg comparison via exact decimal cross-multiplication
     # (bal > sum/cnt  ≡  bal*cnt > sum) — float avg would put boundary
     # rows at the mercy of summation order.
-    return spark.sql(
-        """
-        SELECT c_custkey, c_name, c_acctbal
-        FROM customer_v c
-        WHERE CAST(c_acctbal AS DECIMAL(18,2))
-              * (SELECT COUNT(*) FROM customer_v c2
-                 WHERE c2.c_nationkey = c.c_nationkey)
-              > (SELECT SUM(CAST(c2.c_acctbal AS DECIMAL(18,2)))
-                 FROM customer_v c2 WHERE c2.c_nationkey = c.c_nationkey)
-        """
-    )
+    with temp_view(load_table(spark, sf_dir, "customer"), "customer_v") as view:
+        return spark.sql(
+            f"""
+            SELECT c_custkey, c_name, c_acctbal
+            FROM {view} c
+            WHERE CAST(c_acctbal AS DECIMAL(18,2))
+                  * (SELECT COUNT(*) FROM {view} c2
+                     WHERE c2.c_nationkey = c.c_nationkey)
+                  > (SELECT SUM(CAST(c2.c_acctbal AS DECIMAL(18,2)))
+                     FROM {view} c2 WHERE c2.c_nationkey = c.c_nationkey)
+            """
+        )
 
 
 Q_ABOVE_AVG_ORACLE = """
@@ -1125,29 +1125,31 @@ SQLFN_MIN_SIZE = 25
 
 
 def q_sql_udf_tvf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("_sqlfn_part")
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("_sqlfn_lineitem")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION net_units(p DOUBLE, d DOUBLE) "
         "RETURNS BIGINT "
         "RETURN CAST(round(p * 100) AS BIGINT) * (100 - CAST(round(d * 100) AS BIGINT))"
     )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION sized_parts(n INT) "
-        "RETURNS TABLE(p_partkey BIGINT, p_size INT) "
-        "RETURN SELECT p_partkey, p_size FROM _sqlfn_part WHERE p_size >= n"
-    )
-    return spark.sql(
-        f"""
-        SELECT p.p_size,
-               COUNT(*) AS n_items,
-               CAST(SUM(CAST(net_units(l.l_extendedprice, l.l_discount)
-                             AS DECIMAL(28,0))) AS BIGINT) AS net_units_total
-        FROM _sqlfn_lineitem l
-        JOIN sized_parts({SQLFN_MIN_SIZE}) p ON l.l_partkey = p.p_partkey
-        GROUP BY p.p_size
-        """
-    )
+    with temp_view(load_table(spark, sf_dir, "part"), "_sqlfn_part") as part, \
+            temp_view(load_table(spark, sf_dir, "lineitem"), "_sqlfn_lineitem") as li:
+        # the table function's body names this call's part view, so it is
+        # (re)defined per call and resolved by the eager analysis below
+        spark.sql(
+            "CREATE OR REPLACE TEMPORARY FUNCTION sized_parts(n INT) "
+            "RETURNS TABLE(p_partkey BIGINT, p_size INT) "
+            f"RETURN SELECT p_partkey, p_size FROM {part} WHERE p_size >= n"
+        )
+        return spark.sql(
+            f"""
+            SELECT p.p_size,
+                   COUNT(*) AS n_items,
+                   CAST(SUM(CAST(net_units(l.l_extendedprice, l.l_discount)
+                                 AS DECIMAL(28,0))) AS BIGINT) AS net_units_total
+            FROM {li} l
+            JOIN sized_parts({SQLFN_MIN_SIZE}) p ON l.l_partkey = p.p_partkey
+            GROUP BY p.p_size
+            """
+        )
 
 
 Q_SQL_UDF_TVF_ORACLE = f"""
@@ -1240,8 +1242,6 @@ SPECS += [
 #   the script's control flow equals the declarative form.
 
 def q_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import temp_view
-
     with temp_view(load_table(spark, sf_dir, "orders"), "orders_psql") as view:
         return spark.sql(
             f"""
@@ -1267,8 +1267,6 @@ GROUP BY o_orderstatus
 
 
 def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import temp_view
-
     with temp_view(load_table(spark, sf_dir, "orders"), "orders_script") as view:
         result = spark.sql(f"""
         BEGIN
@@ -1495,10 +1493,8 @@ SPECS += [
 # verified surface. Cents arithmetic keeps the aggregate integer-exact.
 
 def q_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import temp_view
-
     with temp_view(load_table(spark, sf_dir, "orders"), "orders_pipe") as view:
-        result = spark.sql(f"""
+        return spark.sql(f"""
         FROM {view}
         |> WHERE o_orderstatus <> 'F'
         |> EXTEND CAST(round(o_totalprice * 100) AS BIGINT) AS cents
@@ -1508,8 +1504,6 @@ def q_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
         |> WHERE n_orders > 0
         |> SELECT o_orderpriority, n_orders, revenue_cents
         """)
-        result.localCheckpoint(eager=True)
-    return result
 
 
 Q_PIPE_SYNTAX_ORACLE = """
@@ -1545,13 +1539,13 @@ def q_listagg_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type")
     days = ev.groupBy("cohort", "d").agg(
         F.countDistinct("event_type").alias("n_types"))
-    days.createOrReplaceTempView("cohort_days_la")
-    return spark.sql("""
+    with temp_view(days, "cohort_days_la") as view:
+        return spark.sql(f"""
         SELECT cohort,
                COUNT(*) AS n_days,
                listagg(CAST(n_types AS STRING), '>')
                  WITHIN GROUP (ORDER BY d) AS type_timeline
-        FROM cohort_days_la
+        FROM {view}
         GROUP BY cohort
     """)
 
@@ -1699,8 +1693,6 @@ RECUR_MAX_DEPTH = 12  # log10 bound with slack; a cycle would hit this
 
 
 def q_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import temp_view
-
     # The CTE's TOTAL output is |customer| x avg depth — it grows
     # linearly with the data, so the engine's absolute row-count
     # circuit breaker (spark.sql.cteRecursionRowLimit, default 1M)
@@ -1780,20 +1772,20 @@ SPECS += [
 # pins the aggregated schema string the uniform fixture yields.
 
 def q_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("_var_events")
-    return spark.sql(
-        """
-        SELECT event_type,
-               COUNT(*) AS n_events,
-               CAST(SUM(variant_get(v, '$.k', 'bigint')) AS BIGINT) AS k_sum,
-               CAST(COUNT(DISTINCT variant_get(v, '$.k', 'bigint')) AS BIGINT)
-                 AS k_distinct,
-               CAST(MAX(variant_get(v, '$.k', 'bigint')) AS BIGINT) AS k_max,
-               schema_of_variant_agg(v) AS props_schema
-        FROM (SELECT event_type, parse_json(props) AS v FROM _var_events)
-        GROUP BY event_type
-        """
-    )
+    with temp_view(load_table(spark, sf_dir, "events"), "_var_events") as view:
+        return spark.sql(
+            f"""
+            SELECT event_type,
+                   COUNT(*) AS n_events,
+                   CAST(SUM(variant_get(v, '$.k', 'bigint')) AS BIGINT) AS k_sum,
+                   CAST(COUNT(DISTINCT variant_get(v, '$.k', 'bigint')) AS BIGINT)
+                     AS k_distinct,
+                   CAST(MAX(variant_get(v, '$.k', 'bigint')) AS BIGINT) AS k_max,
+                   schema_of_variant_agg(v) AS props_schema
+            FROM (SELECT event_type, parse_json(props) AS v FROM {view})
+            GROUP BY event_type
+            """
+        )
 
 
 Q_VARIANT_PROPS_ORACLE = """

@@ -3311,12 +3311,9 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-round collect is bounded driver state (KCORE_ROUNDS rows).
     def _evict(df: DataFrame) -> None:
         # A localCheckpoint'ed frame's plan is a LogicalRDD; unpersist
-        # its backing RDD to free the blocks before job end. Private
-        # API via py4j — fail-soft to round-5 hold-to-job-end behavior.
-        try:
-            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
+        # its backing RDD to free the blocks before job end (private API
+        # via py4j).
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
     cur = (
         edges.selectExpr("pa AS u", "pb AS v")
@@ -3528,20 +3525,6 @@ SPECS += [
 LPA_ROUNDS = 3
 
 
-def _pin(df: DataFrame) -> DataFrame:
-    """Materialize to MEMORY_AND_DISK but KEEP lineage. Unlike
-    localCheckpoint, an evicted block recomputes from lineage instead of
-    failing the query — the difference matters late in a very long
-    session (the driver's sf0.1 sim runs ~400 queries in one JVM, and
-    truncated-lineage blocks can die there under block-manager
-    pressure)."""
-    from pyspark import StorageLevel
-
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    return df
-
-
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     baskets = li.groupBy("l_orderkey").agg(
@@ -3553,19 +3536,21 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "y -> struct(x AS pa, y AS pb))))")).alias("p"))
         .select("p.pa", "p.pb").distinct()
     )
-    e = _pin(
+    e = (
         edges.selectExpr("pa AS u", "pb AS v")
         .unionAll(edges.selectExpr("pb AS u", "pa AS v"))
+        .localCheckpoint(eager=True)
     )
     labels = e.select("u").distinct().withColumn("label", F.col("u"))
     rounds = []
     for r in range(1, LPA_ROUNDS + 1):
         nb = e.join(labels.selectExpr("u AS v", "label"), "v")
         counts = nb.groupBy("u", "label").agg(F.count("*").alias("c"))
-        labels = _pin(
+        labels = (
             counts.groupBy("u")
             .agg(F.max(F.struct("c", (-F.col("label")).alias("nl"))).alias("m"))
             .selectExpr("u", "-m.nl AS label")
+            .localCheckpoint(eager=True)
         )
         sizes = labels.groupBy("label").agg(F.count("*").alias("sz"))
         rounds.append(sizes.agg(
@@ -4680,13 +4665,13 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "y -> struct(x AS pa, y AS pb))))")).alias("p"))
         .select("p.pa", "p.pb").distinct()
     )
-    edges = _pin(edges)
+    edges = edges.localCheckpoint(eager=True)
     e = edges.selectExpr("pa AS u", "pb AS v").unionAll(
         edges.selectExpr("pb AS u", "pa AS v"))
     labels = e.select("u").distinct().withColumn("label", F.col("u"))
     # Intermediate rounds stay LAZY: each is referenced exactly once (by
-    # the next round), so a per-round _pin paid an eager count job and a
-    # cache write for nothing — only the FINAL labels frame fans out (la,
+    # the next round), so a per-round checkpoint paid an eager job and a
+    # block write for nothing — only the FINAL labels frame fans out (la,
     # lb, dc) and needs materialization (r10; the kcore/components lesson
     # of r9 applied to a fixed-round loop: zero per-round driver jobs).
     for _ in range(LPA_ROUNDS):
@@ -4697,7 +4682,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.max(F.struct("c", (-F.col("label")).alias("nl"))).alias("m"))
             .selectExpr("u", "-m.nl AS label")
         )
-    labels = _pin(labels)
+    labels = labels.localCheckpoint(eager=True)
     m_row = edges.agg(F.count("*").alias("m"))
     la = labels.selectExpr("u AS pa", "label AS label_a")
     lb = labels.selectExpr("u AS pb", "label AS label_b")

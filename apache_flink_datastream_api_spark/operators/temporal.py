@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..registry import QuerySpec
-from ..sources.tables import load_table
+from ..sources.tables import load_table, temp_view
 
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
@@ -363,14 +363,13 @@ def q_user_sessions_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.udtfs import register_udtfs
 
     register_udtfs(spark)
-    view = f"events_sessions_udtf_{abs(hash(sf_dir)) % 10**8}"
-    load_table(spark, sf_dir, "events").select(
-        "user_id", F.unix_millis("ts").alias("ts_ms"), "event_id"
-    ).createOrReplaceTempView(view)
-    return spark.sql(
-        f"SELECT * FROM gap_sessionize(TABLE({view}) "
-        "PARTITION BY user_id ORDER BY (ts_ms, event_id))"
-    )
+    events = load_table(spark, sf_dir, "events").select(
+        "user_id", F.unix_millis("ts").alias("ts_ms"), "event_id")
+    with temp_view(events, "events_sessions_udtf") as view:
+        return spark.sql(
+            f"SELECT * FROM gap_sessionize(TABLE({view}) "
+            "PARTITION BY user_id ORDER BY (ts_ms, event_id))"
+        )
 
 
 Q_SESSIONS_UDTF_ORACLE = f"""

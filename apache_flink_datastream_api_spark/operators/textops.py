@@ -22,7 +22,7 @@ from ..functions import text as X
 from ..functions.localdf import local_literal_df
 from ..functions.hashing import portable_hash64, portable_hash64_sql
 from ..registry import QuerySpec
-from ..sources.tables import load_table, spread_small_source
+from ..sources.tables import load_table, spread_small_source, temp_view
 
 TOKS_S = X.tokens_spark("text")
 TOKS_D = X.tokens_duck("text")
@@ -310,26 +310,25 @@ def _bm25_term_duck(t: str) -> str:
 
 def text_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    spread_small_source(docs.select("doc_id", "text"), spark).createOrReplaceTempView(
-        "bm25_docs"
-    )
     df_terms = ", ".join(
         f"COUNT(DISTINCT CASE WHEN token = '{t}' THEN doc_id END) AS df_{t}"
         for t in SEARCH_TERMS
     )
     score = " + ".join(_bm25_term_spark(t) for t in SEARCH_TERMS)
-    return spark.sql(f"""
+    spread = spread_small_source(docs.select("doc_id", "text"), spark)
+    with temp_view(spread, "bm25_docs") as view:
+        return spark.sql(f"""
         WITH stats AS (
           SELECT CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS n_docs, {df_terms}
-          FROM (SELECT doc_id, explode({TOKS_S.replace('text', 'bm25_docs.text')}) AS token
-                FROM bm25_docs)
+          FROM (SELECT doc_id, explode({TOKS_S.replace('text', f'{view}.text')}) AS token
+                FROM {view})
         ), lens AS (
           SELECT CAST(SUM(size({TOKS_S})) AS DOUBLE)
-                 / COUNT(*) AS avgdl FROM bm25_docs
+                 / COUNT(*) AS avgdl FROM {view}
         )
         SELECT doc_id, score FROM (
           SELECT doc_id, ({score}) AS score
-          FROM (SELECT doc_id, text, CAST(size({TOKS_S}) AS DOUBLE) AS dl FROM bm25_docs)
+          FROM (SELECT doc_id, text, CAST(size({TOKS_S}) AS DOUBLE) AS dl FROM {view})
           CROSS JOIN stats CROSS JOIN lens
         ) WHERE score > 0
         ORDER BY score DESC, doc_id LIMIT 20
@@ -946,8 +945,6 @@ def pipeline_rag_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     from .pipeline import chunk_documents
-
-    from ..sources.tables import temp_view
 
     chunks = chunk_documents(spark, sf_dir)
     df_terms = ", ".join(

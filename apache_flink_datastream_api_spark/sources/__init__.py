@@ -1,1 +1,1 @@
-from .tables import load_table, load_tables, register_tables  # noqa: F401
+from .tables import load_table  # noqa: F401

@@ -22,7 +22,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..schemas import ALL_TABLES, TABLE_SCHEMAS
+from ..schemas import TABLE_SCHEMAS
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -142,25 +142,12 @@ def spread_small_source(df: DataFrame, spark: SparkSession) -> DataFrame:
 
     Self-tuning at scale: when the scan already has at least half a task
     per core (any real 100 TB table: thousands of splits), this is a
-    no-op — no shuffle is added. Disable outright with
-    ``SPARK_GRAFT_SPREAD=off`` (plan-purity tests).
+    no-op — no shuffle is added.
     """
-    if os.environ.get("SPARK_GRAFT_SPREAD", "auto") == "off":
-        return df
     target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= max(1, target // 2):
         return df
     return df.repartition(target)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=ALL_TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_tables(spark: SparkSession, sf_dir: str, names=ALL_TABLES) -> None:
-    """Register testdata tables as temp views so queries can use spark.sql."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
 
 
 @contextmanager

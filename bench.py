@@ -705,13 +705,6 @@ def main() -> None:
     for name in subset if subset is not None else HEADLINE:
         # progress marker so a crash mid-run is attributable to a query
         print(f"[bench] {name}", file=sys.stderr, flush=True)
-        # Drop the PREVIOUS query's cached plans. Every _pin()/persist()
-        # a query makes is dead weight once the next query starts (plans
-        # never match across queries), and over ~330 queries the
-        # accumulation is the r6 shared-session contamination mechanism
-        # (GC pressure inflated unrelated late queries up to 8x). Within
-        # a query, warm-run -> measured-run cache reuse is untouched.
-        spark.catalog.clearCache()
         force(specs[name].fn(spark, SF_DIR))  # warm: codegen + JIT, not measured
         runs: list[float] = []
         for _ in range(2):

@@ -63,6 +63,10 @@ def main() -> int:
     assert len(rows) >= 0
 
     con = duckdb.connect()
+    # DuckDB shares this process with the Spark driver and by default
+    # takes up to 80% of RAM; some oracles (j3_first_touch_stream) want
+    # over 3 GB at sf0.1, so cap it to keep one process within the host.
+    con.sql("SET memory_limit='3GB'; SET threads=2")
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
 

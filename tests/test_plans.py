@@ -15,6 +15,7 @@ from apache_flink_datastream_api_spark.plans.inspect import (
 )
 
 from .conftest import SF_DIR
+from .test_tables import _jobs_in
 
 
 def test_q6_filter_pushdown(spark):
@@ -352,6 +353,10 @@ def test_negative_pairs_broadcasts_count(spark):
                ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin")), plan
 
 
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
 def test_registry_wide_plan_hygiene(spark):
     """Sweep EVERY batch registry query's physical plan: no accidental
     CartesianProduct anywhere, and every BroadcastNestedLoopJoin is on an
@@ -359,7 +364,13 @@ def test_registry_wide_plan_hygiene(spark):
     BY CONSTRUCTION (one-row count aggregates, a handful of band/anchor
     rows, or a deliberately brute-force baseline). A new query that
     sneaks in an unkeyed join fails here before it costs quadratic time
-    at scale."""
+    at scale.
+
+    Constructing a query also leaves nothing in the shared session: no
+    temp view (register one only through ``sources.tables.temp_view``)
+    and no cached plan (stage with ``localCheckpoint``). A cached plan
+    outlives the query and replaces the same subtree in every later
+    query's plan, at the cached relation's partition count."""
     from apache_flink_datastream_api_spark.registry import all_queries
     from apache_flink_datastream_api_spark.plans.inspect import explain_string
 
@@ -467,11 +478,23 @@ def test_registry_wide_plan_hygiene(spark):
         "q_haar_wavelet",  # filter re-derives one level-array over an
                            # already-aggregated per-user relation (0.5 s)
     }
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    # other tests' fixtures cache frames into this session
+    spark.catalog.clearCache()
     violations = []
     for name, spec in all_queries().items():
         if skip_tags & set(spec.tags):
             continue
+        views = _temp_views(spark)
         plan = explain_string(spec.fn(spark, SF_DIR), "simple")
+        left = _temp_views(spark) - views
+        if left:
+            violations.append(f"{name}: leaves temp view(s) {sorted(left)}")
+        if not cache_manager.isEmpty():
+            violations.append(f"{name}: leaves a cached plan")
+            spark.catalog.clearCache()
+        if "InMemoryRelation" in plan:
+            violations.append(f"{name}: InMemoryRelation in plan")
         if "CartesianProduct" in plan:
             violations.append(f"{name}: CartesianProduct")
         if "BroadcastNestedLoopJoin" in plan and name not in bnlj_ok:
@@ -486,6 +509,14 @@ def test_registry_wide_plan_hygiene(spark):
                         f"{len(ls)}-char expression chain")
                     break
     assert not violations, "\n".join(violations)
+
+
+def test_pipe_syntax_construction_runs_no_job(spark):
+    """Building the pipe-syntax query only plans it: the caller's action
+    is the one place its aggregate runs."""
+    jobs = _jobs_in(spark.sparkContext, "plans-pipe-syntax-construct",
+                    lambda: relational.q_pipe_syntax(spark, SF_DIR))
+    assert jobs == [], jobs
 
 
 def test_decile_binning_has_no_percentile_buffer(spark):

@@ -1,0 +1,40 @@
+package graft.fs;
+
+import java.io.IOException;
+import java.net.URI;
+import java.net.URISyntaxException;
+
+import org.apache.hadoop.conf.Configuration;
+import org.apache.hadoop.fs.DelegateToFileSystem;
+import org.apache.hadoop.fs.FsConstants;
+import org.apache.hadoop.fs.FsServerDefaults;
+import org.apache.hadoop.fs.Path;
+import org.apache.hadoop.fs.local.LocalConfigKeys;
+
+/** Hadoop's {@code RawLocalFs} (the FileContext side) over {@link NioRawLocalFileSystem}. */
+public class NioRawLocalFs extends DelegateToFileSystem {
+  NioRawLocalFs(URI theUri, Configuration conf) throws IOException, URISyntaxException {
+    super(theUri, new NioRawLocalFileSystem(), conf, FsConstants.LOCAL_FS_URI.getScheme(), false);
+  }
+
+  @Override
+  public int getUriDefaultPort() {
+    return -1;
+  }
+
+  @Override
+  @Deprecated
+  public FsServerDefaults getServerDefaults() throws IOException {
+    return LocalConfigKeys.getServerDefaults();
+  }
+
+  @Override
+  public FsServerDefaults getServerDefaults(Path f) throws IOException {
+    return LocalConfigKeys.getServerDefaults();
+  }
+
+  @Override
+  public boolean isValidName(String src) {
+    return true;
+  }
+}

@@ -1,4 +1,4 @@
-"""SparkSession factory (SURVEY.md §2.10 E1/E2).
+r"""SparkSession factory (SURVEY.md §2.10 E1/E2).
 
 The reference obtains a ``StreamExecutionEnvironment`` and occasionally forces
 ``setParallelism(1)`` for output ordering
@@ -14,13 +14,70 @@ SparkSession tuned for *scale-out* execution instead:
   deterministic across driver and oracle.
 - ``shuffle_partitions`` defaults to the local core count for tests; on a
   real cluster leave it to AQE's coalescing from a high initial value.
+
+Checkpoint I/O: every streaming trigger writes an offset-log file, a
+commit-log file, a file-source log file and one state delta per partition,
+each as a temp file renamed into place with a ``.crc`` sibling. Without
+``libhadoop`` (not shipped with pyspark), Hadoop's ``RawLocalFileSystem``
+starts a ``chmod`` process for every file it creates and a ``readlink``
+process for every link lookup, several per ``FileContext`` rename: about a
+hundred process starts per trigger of a two-query stateful stream, and
+most of its commit time. When ``get_spark`` launches a ``local[...]`` JVM it
+therefore puts ``jvm/localfs.jar`` on the driver class path and names its
+classes for ``file:`` paths (``fs.file.impl`` and
+``fs.AbstractFileSystem.file.impl``). They are Hadoop's own
+``LocalFileSystem``/``LocalFs`` (checksums, ``.crc`` files and atomic
+renames unchanged) over a raw filesystem that does those two calls through
+``java.nio`` with the same results; the ``FileSystem`` side also keeps the
+no-replace rename of Hive's ``ProxyLocalFileSystem``, which pyspark's jars
+otherwise make the ``file:`` default (sources in ``jvm/src``, rebuilt by
+``scripts/build_localfs_jar.py``). Other masters run executors in other
+JVMs and keep stock Hadoop, as does a session created by someone else, for
+example a driver's vanilla one; there it can be turned on at submit time:
+
+    spark-submit --driver-class-path <package>/jvm/localfs.jar \
+      --conf spark.hadoop.fs.file.impl=graft.fs.NioLocalFileSystem \
+      --conf spark.hadoop.fs.AbstractFileSystem.file.impl=graft.fs.NioLocalFs ...
 """
 
 from __future__ import annotations
 
 import os
+import re
+from pathlib import Path
 
+from py4j.java_gateway import JavaClass
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+LOCALFS_JAR = Path(__file__).with_name("jvm") / "localfs.jar"
+_CLASSPATH = "spark.driver.extraClassPath"
+_LOCALFS_CONF = {
+    "spark.hadoop.fs.file.impl": "graft.fs.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "graft.fs.NioLocalFs",
+}
+
+
+def _session_conf(master: str, extra_conf: dict[str, str]) -> dict[str, str]:
+    """``extra_conf`` plus, for a ``local[...]`` master whose JVM can load
+    ``LOCALFS_JAR`` (one this call launches, or one already running with it
+    on its class path), the confs that serve ``file:`` paths through the jar.
+    A caller's class path is kept and the jar appended to it."""
+    conf = dict(extra_conf)
+    if not re.fullmatch(r"local(\[.*\])?", master):
+        return conf
+    if not LOCALFS_JAR.is_file():
+        raise FileNotFoundError(
+            f"{LOCALFS_JAR} is missing; build it with scripts/build_localfs_jar.py")
+    gateway = SparkContext._gateway
+    if gateway is not None and not _loads_localfs(gateway.jvm):
+        return conf
+    conf[_CLASSPATH] = os.pathsep.join(filter(None, (conf.get(_CLASSPATH), str(LOCALFS_JAR))))
+    return {**_LOCALFS_CONF, **conf}
+
+
+def _loads_localfs(jvm) -> bool:
+    return isinstance(jvm.graft.fs.NioLocalFileSystem, JavaClass)
 
 
 def get_spark(
@@ -58,8 +115,14 @@ def get_spark(
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = _session_conf(master, extra_conf or {})
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if _LOCALFS_CONF.items() <= conf.items() and not _loads_localfs(spark._jvm):
+        spark.stop()
+        raise RuntimeError(
+            f"the Spark JVM did not load {LOCALFS_JAR}, which spark.hadoop.fs.file.impl "
+            f"names; was {_CLASSPATH} replaced, e.g. by --driver-class-path?")
     spark.sparkContext.setLogLevel("ERROR")
     return spark

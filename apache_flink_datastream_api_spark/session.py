@@ -28,7 +28,12 @@ classes for ``file:`` paths (``fs.file.impl`` and
 ``fs.AbstractFileSystem.file.impl``). They are Hadoop's own
 ``LocalFileSystem``/``LocalFs`` (checksums, ``.crc`` files and atomic
 renames unchanged) over a raw filesystem that does those two calls through
-``java.nio`` with the same results; the ``FileSystem`` side also keeps the
+``java.nio`` with the same results. One difference is stricter than stock:
+the ``FileContext`` side verifies checksums on the one-argument ``open``
+that Spark's checkpoint file manager calls, where stock ``LocalFs`` reads
+the raw file, so a corrupted offset, commit or source log raises
+``ChecksumException`` instead of being read back silently. The
+``FileSystem`` side also keeps the
 no-replace rename of Hive's ``ProxyLocalFileSystem``, which pyspark's jars
 otherwise make the ``file:`` default (sources in ``jvm/src``, rebuilt by
 ``scripts/build_localfs_jar.py``). Other masters run executors in other

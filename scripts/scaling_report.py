@@ -310,7 +310,7 @@ def write_state_section(f) -> None:
             f"| {legs['1']['peak_bytes'] / 1e6:.1f} |\n"
         )
     f.write(
-        "\nPer-row adjudication: `w3`/`w6` hold EXACTLY constant state\n"
+        "\nPer-row reading: `w3`/`w6` hold EXACTLY constant state\n"
         "across 10x data (one row per open window pane). `j2`/`j3` join\n"
         "buffers grow precisely with density (a_state 1.00) while holding\n"
         "only ~2-3% of the corpus — the watermark window's share — and\n"

@@ -17,7 +17,7 @@ warm + min-of-2), each query x leg in its OWN JVM, 8g driver heap.
 
 A query that cannot finish a leg (e.g. ``j3_threeway_stream_join`` on the
 Zipf leg, whose interval join has multiplicative output under the hot
-key — SCALING.md adjudication) is recorded as a ``{"sec": null}`` DNF
+key — SCALING.md analysis) is recorded as a ``{"sec": null}`` DNF
 record rather than aborting the sweep, and rendered as ``DNF`` in the
 table.
 
@@ -91,7 +91,7 @@ def _run_one(q: str, label: str, d: str) -> dict:
         line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
         rec = json.loads(line)
         return {"leg": label, "query": q, "sec": rec["queries"][q],
-                "fingerprint": rec.get("fingerprint", {})}
+                "host": rec["host"]}
     except subprocess.TimeoutExpired:
         print(f"[skew] {q}@{label} DNF (timeout)", flush=True)
         return {"leg": label, "query": q, "sec": None, "dnf": "timeout"}

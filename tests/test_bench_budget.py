@@ -1,39 +1,13 @@
-"""Per-query bench regression guard (VERDICT r3 punch-list item 2).
+"""Bench regression guard: exact work counters, not wall-clock.
 
-Re-measures the most expensive headline queries at sf0.1 with bench.py's
-own methodology (local[$SPARK_GRAFT_CPUS], noop sink, warm run + min of
-two measured runs) and fails if any exceeds its committed
-``BENCH_DETAIL.json`` time by more than the shared guard envelope
-(``bench.over_budget``: >75% relative AND >1 s absolute). A +35% drift
-like round 3's ``q_poisson_bootstrap_ci`` now fails at commit time
-instead of being found by the judge.
-
-The measurement runs in a SUBPROCESS (``SPARK_GRAFT_BENCH_ONLY`` subset
-mode) because bench budgets are calibrated against a local[32] session —
-the suite's shared local[4] fixture would trip every budget. Scope:
-
-- default (``full``): EVERY headline query with a committed budget —
-  one subprocess amortizes session startup across all ~320, so the
-  full guard costs about what a bench refresh does (VERDICT r4 item 4).
-- ``SPARK_GRAFT_BENCH_GUARD=top``: only the top ``GUARD_TOP_N`` by
-  committed time — the quick inner-loop mode while iterating.
-- ``SPARK_GRAFT_BENCH_GUARD=off``: skip (e.g. on a loaded machine).
-
-Queries added to HEADLINE after the last committed refresh have no
-budget yet and are skipped here; the next full bench run budgets them.
-
-Round-6 noise protocol (three same-code guard runs produced three
-DISJOINT 2-3x "regression" sets — per-query lottery noise of a long
-shared-JVM session, SCALING.md finding 4):
-1. measure in bench.HEADLINE order (the order the budgets were measured
-   in — shared-JVM wall-clock is order-dependent);
-2. skip when a co-tenant Spark JVM is alive (sibling_jvm_rss_gb in the
-   fingerprint — the pytest fixture session; memory/GC pressure the CPU
-   calibration loop cannot see);
-3. re-adjudicate any flagged query in a FRESH isolated JVM and fail only
-   if it STILL exceeds its envelope — a real regression reproduces in
-   isolation, a lottery victim does not (verified: all 9 phantoms of the
-   worst run measured 1.1-1.6x in isolation, inside the envelope).
+Runs a few headline queries through ``bench.py``'s subset mode (warm call,
+then two measured calls, each charged with every job submitted during it)
+and requires each measured call's jobs, stages, tasks and shuffle bytes to
+equal this host's committed baseline in ``BENCH_DETAIL.json``. Co-tenant
+load and other JVMs move wall-clock but not these counters, so the guard
+runs inside the full suite. It skips only when the baseline has no entry
+for this host key (cpus, sf, pyspark version); take one with
+``SPARK_GRAFT_BENCH_REFRESH=1 python bench.py``.
 """
 
 from __future__ import annotations
@@ -46,294 +20,83 @@ import sys
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-BENCH_SF_DIR = os.environ.get("SPARK_GRAFT_BENCH_SF_DIR", "/root/testdata/sf0.1")
-GUARD_TOP_N = 12
 
 sys.path.insert(0, REPO)
 import bench  # noqa: E402
 
+# A batch join, a query whose first call in a session runs more jobs than
+# later ones (cached centroids), and streaming drains whose micro-batch jobs
+# run under the stream's run id rather than the caller's job group.
+GUARDED = [
+    "tpch_q3_shipping_priority",
+    "knn_ivf_cosine",
+    "w4_session_append_stream",
+    "j3_first_touch_stream",
+    "x4_debounce_session_stream",
+]
 
-def _mode() -> str:
-    return os.environ.get("SPARK_GRAFT_BENCH_GUARD", "full")
 
-
-@pytest.mark.skipif(
-    _mode() == "off" or not os.path.isdir(BENCH_SF_DIR),
-    reason="bench guard disabled or sf0.1 testdata missing",
-)
-def test_headline_queries_within_committed_budget():
-    with open(os.path.join(REPO, "BENCH_DETAIL.json")) as f:
-        detail = json.load(f)
-    budgets = {
-        name: t for name, t in detail["queries"].items() if name in bench.HEADLINE
-    }
-    assert budgets, "committed BENCH_DETAIL.json has no headline budgets"
-    # Measure in the SAME order the committed refresh measured in
-    # (bench.HEADLINE order, not alphabetical): a shared-JVM sequential
-    # bench is order-dependent — GC/codegen history from earlier queries
-    # bleeds into later ones (SCALING.md finding 4, up to 8x) — so
-    # comparing an alphabetical-order measurement against curated-order
-    # budgets flags phantom regressions once budgets are quiet-box minima.
-    if _mode() == "top":
-        top = {
-            n for n, _ in sorted(budgets.items(), key=lambda kv: -kv[1])[:GUARD_TOP_N]
-        }
-        guarded = [n for n in bench.HEADLINE if n in top]
-    else:
-        guarded = [n for n in bench.HEADLINE if n in budgets]
-
-    # Pre-flight co-tenancy check BEFORE paying for the ~15-minute
-    # measurement: inside a full-suite run the session fixture's Spark JVM
-    # is already alive, the comparison would be skipped afterwards anyway
-    # (noise protocol step 2) — skip up front instead. The post-measurement
-    # fingerprint check below still covers a JVM appearing mid-run.
-    sibling_gb = bench.sibling_jvm_rss_gb()
-    if sibling_gb > bench.SIBLING_JVM_REFUSE_GB:
-        pytest.skip(
-            f"co-tenant Spark JVM alive (RSS {sibling_gb} GiB > "
-            f"{bench.SIBLING_JVM_REFUSE_GB} GiB): shared-JVM wall-clock is "
-            "not comparable to quiet-box budgets — run this guard "
-            "standalone (it is part of the round-close sequence)"
-        )
-
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_BENCH_ONLY=",".join(guarded),
-        SPARK_GRAFT_SF_DIR=BENCH_SF_DIR,
-    )
-    proc = subprocess.run(
-        [sys.executable, os.path.join(REPO, "bench.py")],
-        env=env,
-        cwd=REPO,
-        capture_output=True,
-        text=True,
-        timeout=1800,
-    )
+def test_guarded_headline_counters_match_baseline():
+    key = bench.host_key(bench.CPUS, bench.sf_of(bench.SF_DIR))
+    with open(bench.DETAIL_PATH) as f:
+        committed = json.load(f)
+    if key not in committed:
+        pytest.skip(f"BENCH_DETAIL.json has no baseline for host {key!r}")
+    assert set(GUARDED) <= set(committed[key]["counters"])
+    env = dict(os.environ, SPARK_GRAFT_BENCH_ONLY=",".join(GUARDED),
+               SPARK_GRAFT_CPUS=str(bench.CPUS))
+    env.pop("SPARK_GRAFT_BENCH_REFRESH", None)
+    proc = subprocess.run([sys.executable, os.path.join(REPO, "bench.py")], env=env,
+                          cwd=REPO, capture_output=True, text=True, timeout=900)
     assert proc.returncode == 0, f"bench subset run failed:\n{proc.stderr[-4000:]}"
-    line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
-    result = json.loads(line)
-    measured = result["queries"]
-
-    # Noise guard (VERDICT r5 item 1 + the round-6 full-suite lesson): the
-    # subset run reports its own load fingerprint; on a contended box
-    # (concurrent bench/suite) OR with a co-tenant Spark JVM alive (the
-    # suite's own session fixture — memory/GC pressure the CPU calibration
-    # loop cannot see) wall-clock comparison against quiet-box budgets is
-    # meaningless, so skip rather than flag phantom regressions. The guard
-    # is authoritative when run standalone on a quiet box — the bench
-    # refresh in the close sequence is that run.
-    fp = result.get("fingerprint") or {}
-    # contention can ARRIVE mid-measurement (intermittent host co-tenant),
-    # so judge the run by the worse of its start/end calibrations
-    calib = max(
-        (c for c in (fp.get("calibration_sec"), fp.get("calibration_sec_end"))
-         if c is not None),
-        default=None,
-    )
-    if calib is not None and bench.box_is_loaded(
-        calib, detail, fp.get("sibling_jvm_rss_gb")
-    ):
-        ref = (detail.get("fingerprint") or {}).get("calibration_sec")
-        pytest.skip(
-            f"box loaded during guard run (calibration {calib}s vs committed "
-            f"{ref}s, sibling JVM RSS {fp.get('sibling_jvm_rss_gb')} GiB > "
-            f"{bench.SIBLING_JVM_REFUSE_GB} GiB threshold) — "
-            "re-run on a quiet box"
-        )
-
-    # Host-drift normalization (VERDICT r8 item 1): committed budgets are
-    # only meaningful on a window matching their multi-core calibration —
-    # divide measured wall-clock by the spark_calibration_sec ratio before
-    # the envelope comparison (bench.drift_factor), and skip entirely when
-    # the drift exceeds the normalization cap (contention the single-thread
-    # probe in box_is_loaded cannot see).
-    ref_spark_cal = (detail.get("fingerprint") or {}).get(
-        "spark_calibration_sec"
-    )
-    if bench.drift_refused(fp.get("spark_calibration_sec"), ref_spark_cal):
-        pytest.skip(
-            f"multi-core drift {fp.get('spark_calibration_sec')}s vs "
-            f"committed {ref_spark_cal}s exceeds {bench.DRIFT_NORM_CAP}x — "
-            "window not budget-comparable"
-        )
-    norm = bench.drift_factor(fp.get("spark_calibration_sec"), ref_spark_cal)
-
-    over = {
-        name: (budgets[name], measured[name])
-        for name in guarded
-        if bench.over_budget(measured[name] / norm, budgets[name])
-    }
-
-    if over:
-        # Isolated-JVM re-adjudication (the round-6 lesson, automating the
-        # judges' round-5 protocol): a ~320-query shared-JVM session has a
-        # heavy per-query right tail — random victims measure 2-3x their
-        # quiet-box minima from GC/code-cache state alone, with DISJOINT
-        # victim sets across identical re-runs (SCALING.md finding 4). A
-        # REAL regression is reproducible in a fresh JVM; a lottery victim
-        # is not. So re-measure ONLY the flagged queries in a new
-        # subprocess and fail on the survivors.
-        env2 = dict(env, SPARK_GRAFT_BENCH_ONLY=",".join(sorted(over)))
-        proc2 = subprocess.run(
-            [sys.executable, os.path.join(REPO, "bench.py")],
-            env=env2,
-            cwd=REPO,
-            capture_output=True,
-            text=True,
-            timeout=1800,
-        )
-        assert proc2.returncode == 0, (
-            f"re-adjudication run failed:\n{proc2.stderr[-4000:]}"
-        )
-        line2 = [l for l in proc2.stdout.splitlines() if l.startswith("{")][-1]
-        result2 = json.loads(line2)
-        # The re-adjudication is only authoritative if ITS box was quiet
-        # too: a co-tenant JVM or CPU contention appearing during the
-        # second measurement would confirm exactly the phantom regression
-        # this protocol exists to prevent (ADVICE r6).
-        fp2 = result2.get("fingerprint") or {}
-        calib2 = max(
-            (c for c in (fp2.get("calibration_sec"),
-                         fp2.get("calibration_sec_end"))
-             if c is not None),
-            default=None,
-        )
-        if calib2 is not None and bench.box_is_loaded(
-            calib2, detail, fp2.get("sibling_jvm_rss_gb")
-        ):
-            pytest.skip(
-                "box became loaded during the isolated re-adjudication run "
-                f"(calibration {calib2}s, sibling JVM RSS "
-                f"{fp2.get('sibling_jvm_rss_gb')} GiB) — survivors are not "
-                "trustworthy; re-run on a quiet box"
-            )
-        if bench.drift_refused(
-            fp2.get("spark_calibration_sec"), ref_spark_cal
-        ):
-            pytest.skip(
-                "multi-core drift during re-adjudication exceeds "
-                f"{bench.DRIFT_NORM_CAP}x — window not budget-comparable"
-            )
-        norm2 = bench.drift_factor(
-            fp2.get("spark_calibration_sec"), ref_spark_cal
-        )
-        remeasured = result2["queries"]
-        over = {
-            name: (budgets[name], measured[name], remeasured[name])
-            for name in over
-            if bench.over_budget(remeasured[name] / norm2, budgets[name])
-        }
-
-    assert not over, (
-        "headline queries over committed budget AND confirmed in an "
-        "isolated-JVM re-measure (committed_s, session_s, isolated_s): "
-        f"{over}"
-    )
+    rec = json.loads([l for l in proc.stdout.splitlines() if l.startswith("{")][-1])
+    assert rec["host"] == key and sorted(rec["counters"]) == sorted(GUARDED)
+    assert rec["moved"] == {}, f"work counters moved (baseline, call 1, call 2): {rec['moved']}"
 
 
-def test_drift_normalization_helpers():
-    """Host-drift normalization (VERDICT r8 item 1): the factor divides
-    measured wall-clock before the envelope test, never goes below 1
-    (a fast window must not loosen the guard), clamps at the refusal
-    cap, and degrades to 1.0 when either probe reading is missing."""
-    assert bench.drift_factor(1.071, 0.482) == 1.071 / 0.482  # the r8 case
-    assert bench.drift_factor(0.3, 0.482) == 1.0
-    assert bench.drift_factor(None, 0.482) == 1.0
-    assert bench.drift_factor(0.482, None) == 1.0
-    assert bench.drift_factor(10.0, 0.482) == bench.DRIFT_NORM_CAP
-    assert bench.drift_refused(10.0, 0.482)
-    assert not bench.drift_refused(1.071, 0.482)
-    assert not bench.drift_refused(None, 0.482)
-    # the r8 phantom-flag set under normalization: a 2.22x-drifted window
-    # measuring 2.379s against a 0.888s budget no longer flags
-    norm = bench.drift_factor(1.071, 0.482)
-    assert bench.over_budget(2.379, 0.888)          # raw: flagged (r8)
-    assert not bench.over_budget(2.379 / norm, 0.888)  # normalized: clean
+KEY = bench.host_key(4, 0.1, "4.1.2")
+BASE = {"jobs": 4, "stages": 5, "tasks": 17, "shuffle_read_bytes": 186760,
+        "shuffle_write_bytes": 186760}
+COMMITTED = {KEY: {"counters": {"q_a": BASE}, "sec": {"q_a": 1.2}}}
 
 
-def test_regression_flag_dump_is_bounded():
-    """VERDICT r8 item 5: the stderr flag report must stay one bounded
-    line even with 50 hypothetical flags, so the driver's captured tail
-    can never lose the JSON contract line to a long dump."""
-    flags = {f"q_hypothetical_{i:03d}": [1.0, 9.9] for i in range(50)}
-    line = bench.format_regressions(flags, 1.234)
-    assert "\n" not in line
-    assert len(line) < 1200
-    assert "+42 more" in line and "BENCH_RUN.json" in line
-    assert "(50, drift norm 1.234x)" in line
-    # small sets print in full, no truncation note
-    small = bench.format_regressions({"q_a": [1.0, 3.0]}, 1.0)
-    assert "more" not in small and "q_a" in small
+def test_unchanged_counters_flag_nothing():
+    assert bench.compare(COMMITTED, KEY, {"q_a": [dict(BASE), dict(BASE)]}) == {}
+    # a query without a baseline entry, or a counter left out of one, is not gated
+    ungated = {KEY: {"counters": {"q_a": {"jobs": 4}}}}
+    moved_bytes = dict(BASE, shuffle_write_bytes=1)
+    assert bench.compare(ungated, KEY, {"q_a": [moved_bytes, moved_bytes],
+                                        "q_new": [moved_bytes]}) == {}
 
 
-def test_flag_adjudication_decision():
-    """The per-flag adjudication decision (r9 refresh finding): the
-    isolated reading is normalized by the SUBPROCESS's own probe vs the
-    PREVIOUS committed reference for the cleared/reproduced verdict; on
-    a refresh the budget written is the reading normalized onto the NEW
-    reference window, regardless of verdict; driver runs never write."""
-    # r9 case pipeline_class_rebalance: r8 budget 0.365, iso 0.646 on a
-    # 1.235x window (0.620 vs ref 0.502) -> 0.523 normalized: envelope
-    # max(1.75*0.365, 1.365) = 1.365 -> cleared
-    cleared, budget = bench.adjudicate_flag(
-        0.365, 0.646, 0.620, 0.502, 0.502, refresh=True)
-    assert cleared and budget == round(0.646 / (0.620 / 0.502), 3) == 0.523
-    # same decision on a driver run: cleared, nothing written
-    cleared, budget = bench.adjudicate_flag(
-        0.365, 0.646, 0.620, 0.502, 0.502, refresh=False)
-    assert cleared and budget is None
-    # a genuine regression reproduces: iso 5.0 on a clean window vs a
-    # 1.0 budget -> NOT cleared; a refresh still replaces the budget
-    # with the isolated truth
-    cleared, budget = bench.adjudicate_flag(
-        1.0, 5.0, 0.502, 0.502, 0.502, refresh=True)
-    assert not cleared and budget == 5.0
-    # missing probes degrade to no normalization, never a crash
-    cleared, budget = bench.adjudicate_flag(
-        1.0, 1.4, None, 0.502, None, refresh=True)
-    assert cleared and budget == 1.4
+def test_moved_counter_is_flagged_with_query_and_counter():
+    second = dict(BASE, tasks=21, shuffle_write_bytes=190000)
+    moved = bench.compare(COMMITTED, KEY, {"q_a": [dict(BASE), second]})
+    assert moved == {"q_a": {"tasks": [17, 17, 21],
+                             "shuffle_write_bytes": [186760, 186760, 190000]}}
+    line = bench.format_moved(moved)
+    assert "q_a.tasks 17->17/21" in line
+    assert "q_a.shuffle_write_bytes 186760->186760/190000" in line
 
 
-def test_flags_to_adjudicate_cap_vs_refresh():
-    """Driver-facing runs cap isolated re-measures at MAX_ADJUDICATIONS
-    (a bigger set = systematic cause, report raw); a refresh run
-    adjudicates everything because it writes budgets — the r9 refresh
-    committed two contaminated patches precisely because the cap
-    skipped adjudication on its 6-flag set."""
-    small = {f"q{i}": [1.0, 3.0] for i in range(bench.MAX_ADJUDICATIONS)}
-    big = {f"q{i}": [1.0, 3.0] for i in range(bench.MAX_ADJUDICATIONS + 1)}
-    assert bench.flags_to_adjudicate(small, False) == list(small)
-    assert bench.flags_to_adjudicate(big, False) == []
-    assert bench.flags_to_adjudicate(big, True) == list(big)
-    assert bench.flags_to_adjudicate({}, False) == []
+def test_other_host_key_refuses_comparison():
+    calls = {"q_a": [dict(BASE), dict(BASE)]}
+    for other in (bench.host_key(32, 0.1, "4.1.2"), bench.host_key(4, 0.01, "4.1.2"),
+                  bench.host_key(4, 0.1, "4.0.1")):
+        assert other != KEY
+        assert bench.compare(COMMITTED, other, calls) is None
 
 
-def test_patch_report_finds_contention_streaks():
-    """scripts/bench_patch_report.find_patches must flag near-contiguous
-    inflation streaks (the r9 refresh failure mode), tolerate cool gaps
-    from too-cheap-to-inflate queries inside a patch, ignore isolated
-    lottery singletons, and divide out whole-run drift first."""
-    from scripts.bench_patch_report import find_patches
-
-    order = [f"q{i}" for i in range(20)]
-    budgets = {n: 1.0 for n in order}
-    # patch at 5-9 with a cool gap at 7; singleton at 15
-    times = {n: 1.0 for n in order}
-    for i in (5, 6, 8, 9):
-        times[f"q{i}"] = 3.0
-    times["q15"] = 3.0
-    patches = find_patches(times, budgets, 1.0, order)
-    assert len(patches) == 1
-    assert patches[0]["positions"] == [5, 9]
-    assert set(patches[0]["queries"]) == {"q5", "q6", "q8", "q9"}
-    # the same streak on a 3x-drifted window is NOT a patch (whole-run
-    # drift is normalized out first)
-    assert find_patches(times, budgets, 3.0, order) == []
-    # loadavg range is attached when the trace exists
-    lv = {n: 1.0 for n in order}
-    lv.update({"q5": 9.0, "q6": 12.0, "q8": 11.0, "q9": 8.5})
-    p = find_patches(times, budgets, 1.0, order, lv)[0]
-    assert p["loadavg_range"] == [8.5, 12.0]
+def test_moved_counter_report_is_bounded():
+    """The driver keeps a bounded output tail and the contract line comes
+    after this report, so it stays one short line however much moved."""
+    moved = {f"q_hypothetical_{i:03d}": {k: [1, 2, 2] for k in bench.GATED}
+             for i in range(50)}
+    line = bench.format_moved(moved)
+    assert "\n" not in line and len(line) < 1200
+    assert "(50 queries)" in line and "+242 more in BENCH_RUN.json" in line
+    small = bench.format_moved({"q_a": {"jobs": [4, 5, 5]}})
+    assert "more" not in small and "q_a.jobs 4->5/5" in small
 
 
 def test_contract_line_fits_driver_tail_with_per_query_map():

@@ -200,11 +200,12 @@ def test_link_lookups_match_stock(spark, pair, tmp_path):
 
 
 def test_corrupted_bytes_still_fail_the_checksum(spark, pair, tmp_path):
-    """Through FileContext, the API of Spark's checkpoint files, whose
-    ``open(path, bufferSize)`` verifies (in Hadoop 3.4.2 the one-argument
-    ``open`` reaches the raw filesystem unverified, for stock and engine
-    alike). The FileSystem API is not exercised: its failure handler moves
-    the bad file to a ``bad_files`` directory at the top of the mount."""
+    """Through FileContext, the API of Spark's checkpoint files, both
+    ``open(path, bufferSize)`` and the one-argument ``open(path)`` that
+    Spark's checkpoint file manager calls verify. (Stock Hadoop 3.4.2's
+    one-argument ``open`` reaches the raw filesystem unverified.) The
+    FileSystem API is not exercised: its failure handler moves the bad file
+    to a ``bad_files`` directory at the top of the mount."""
     _, fc = pair["nio"]
     path = tmp_path / "data"
     hp = _hpath(spark, path)
@@ -215,11 +216,11 @@ def test_corrupted_bytes_still_fail_the_checksum(spark, pair, tmp_path):
     raw = bytearray(path.read_bytes())
     raw[0] ^= 0xFF
     path.write_bytes(bytes(raw))
-    stream = fc.open(hp, 4096)
-    with pytest.raises(Py4JJavaError) as err:
-        stream.read()
-    stream.close()
-    assert err.value.java_exception.getClass().getName() == "org.apache.hadoop.fs.ChecksumException"
+    for stream in (fc.open(hp, 4096), fc.open(hp)):
+        with pytest.raises(Py4JJavaError) as err:
+            stream.read()
+        stream.close()
+        assert err.value.java_exception.getClass().getName() == "org.apache.hadoop.fs.ChecksumException"
 
 
 def test_rename_keeps_an_existing_file_as_the_default_file_scheme_did(spark, pair, tmp_path):

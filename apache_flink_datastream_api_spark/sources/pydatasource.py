@@ -43,9 +43,7 @@ from pyspark.sql.types import (
 )
 
 from .fixtures import BASE_TS, ENTITIES, OPERATIONS, USERS
-from ..streaming.sinks import (
-    _ephemeral_checkpoint, start_stream, take_memory_sink,
-)
+from ..streaming.sinks import drain, take_memory_sink
 
 _A, _C, _M = 1103515245, 12345, 2**31
 
@@ -487,21 +485,12 @@ def s3_generator_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     name = f"gen_{uuid.uuid4().hex[:12]}"
-    q = start_stream(
+    with drain(
         _gen_agg(stream).writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", _ephemeral_checkpoint())
-        .trigger(processingTime="0 seconds"),
-        spark, cap=4)
-    try:
-        # Drain to completion between batches (no mid-epoch stop, no
-        # per-poll collect job — the old loop ran a driver collect
-        # every 0.1 s while the stream drained).
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = take_memory_sink(spark, name)
+        .format("memory").queryName(name),
+        spark, cap=4, available_now=False,
+    ):
+        out = take_memory_sink(spark, name)
     done = out.agg(F.sum("cnt")).collect()[0][0]
     if done != n:
         raise RuntimeError(f"generator stream drained {done}/{n} rows")
@@ -523,18 +512,12 @@ def s3_generator_simple_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     name = f"gens_{uuid.uuid4().hex[:12]}"
-    q = start_stream(
+    with drain(
         _gen_agg(stream).writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", _ephemeral_checkpoint())
-        .trigger(processingTime="0 seconds"),
-        spark, cap=4)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = take_memory_sink(spark, name)
+        .format("memory").queryName(name),
+        spark, cap=4, available_now=False,
+    ):
+        out = take_memory_sink(spark, name)
     done = out.agg(F.sum("cnt")).collect()[0][0]
     if done != n:
         raise RuntimeError(f"simple stream drained {done}/{n} rows")
@@ -598,28 +581,19 @@ def k6_python_stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
             .option("rowsPerBatch", 1000)
             .load()
         )
-        # processingTime trigger + published-row drain (not availableNow:
-        # the Python stream source's availableNow end-offset is computed
-        # once, which would collapse the capped generator to one batch —
-        # this query exists to exercise the MULTI-batch commit ledger).
-        q = start_stream(
-            stream.writeStream.format("audit_trail_sink")
-            .option("path", d)
-            .option("checkpointLocation", _ephemeral_checkpoint())
-            .trigger(processingTime="0 seconds"),
-            spark)
-        try:
-            # Block until every available offset is COMMITTED (the
-            # driver-side sink commit — rename + ledger marker — is part
-            # of the batch), then stop BETWEEN batches. The previous
-            # 0.1 s file-count polling loop stopped the query mid-epoch,
-            # which aborted the in-flight PythonStreamingWrite after its
-            # Python runner was torn down — the "failed to abort" +
-            # accumulator-EOFError stderr tracebacks in the r9 driver
-            # tail (VERDICT r9 item 4).
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        # Processing-time drain, not availableNow: the Python stream
+        # source's availableNow end offset is computed once, which would
+        # collapse the capped generator to one batch — this query exists
+        # to exercise the MULTI-batch commit ledger. The drain stops
+        # between batches, after every available offset is COMMITTED (the
+        # driver-side sink commit — rename + ledger marker — is part of
+        # the batch); stopping mid-epoch aborted the in-flight
+        # PythonStreamingWrite after its Python runner was torn down.
+        with drain(
+            stream.writeStream.format("audit_trail_sink").option("path", d),
+            spark, available_now=False,
+        ):
+            pass
         published = 0
         for part in glob.glob(os.path.join(d, "part-*")):
             with open(part) as f:

@@ -14,7 +14,9 @@ final table is batching-invariant.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -23,25 +25,30 @@ from ..registry import QuerySpec
 from ..sources.tables import (
     load_table, nanos_to_timestamps, read_schema, set_read_conf, table_path,
 )
-from .sinks import (
-    _ephemeral_checkpoint, run_available_now, start_stream, take_memory_sink,
-)
+from .sinks import drain, run_available_now, take_memory_sink
 from .state import interval_alerts, session_durations
 
 
 def _stream_source_dir(sf_dir: str, table: str) -> str:
     """Expose ``<sf_dir>/<table>.parquet`` to the file-stream source
-    through a temp dir of symlinks (the source wants a directory; no
-    copy). A multi-file table symlinks each part file individually: the
-    file source assigns one input partition per FILE, so multi-file
-    ingest keeps map-side work (signature folds, codecs) parallel — a
-    single giant file would serialize it regardless of cluster size."""
+    through a temp dir of symlinks (the source wants a directory and
+    rejects a single-file path; no copy). A multi-file table symlinks
+    each part file individually: the file source assigns one input
+    partition per FILE, so multi-file ingest keeps map-side work
+    (signature folds, codecs) parallel — a single giant file would
+    serialize it regardless of cluster size.
+
+    One dir serves every call with the same source layout: its name is
+    derived from the absolute source path and its part list. It is built
+    under a fresh name and renamed into place, so concurrent callers
+    never see a half-built dir; the loser of a race uses the winner's."""
     # abspath: a relative sf_dir would otherwise create symlinks that
     # resolve relative to the TEMP dir and dangle (file source sees an
     # empty directory and the replay silently yields zero rows).
     src = os.path.abspath(table_path(sf_dir, table))
-    stream_dir = tempfile.mkdtemp(prefix=f"{table}_stream_")
-    if os.path.isdir(src):
+    is_dir = os.path.isdir(src)
+    parts = []
+    if is_dir:
         parts = [p for p in sorted(os.listdir(src)) if p.endswith(".parquet")]
         # Micro-batch ORDER under maxFilesPerTrigger follows the source's
         # MILLISECOND modification times (the source resolves symlinks, so
@@ -67,10 +74,24 @@ def _stream_source_dir(sf_dir: str, table: str) -> str:
                     "data. Re-stamp strictly increasing mtimes in part-name "
                     "order."
                 ) from ex
+    digest = hashlib.sha256("\0".join([src, *parts]).encode()).hexdigest()
+    stream_dir = os.path.join(
+        tempfile.gettempdir(), f"{table}_stream_{digest[:16]}")
+    if os.path.isdir(stream_dir):
+        return stream_dir
+    tmp = tempfile.mkdtemp(prefix=f".{table}_stream_")
+    if is_dir:
         for p in parts:
-            os.symlink(os.path.join(src, p), os.path.join(stream_dir, p))
+            os.symlink(os.path.join(src, p), os.path.join(tmp, p))
     else:
-        os.symlink(src, os.path.join(stream_dir, f"{table}.parquet"))
+        os.symlink(src, os.path.join(tmp, f"{table}.parquet"))
+    try:
+        os.rename(tmp, stream_dir)
+    except OSError:
+        # another caller renamed its dir into place first
+        shutil.rmtree(tmp)
+        if not os.path.isdir(stream_dir):
+            raise
     return stream_dir
 
 
@@ -569,13 +590,11 @@ def late_data_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .csv(d)
         .withColumn("event_ts", F.timestamp_millis("ts_ms"))
     )
-    q = (
-        stream.writeStream.foreachBatch(cap)
-        .option("checkpointLocation", _ephemeral_checkpoint())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    try:
+        with drain(stream.writeStream.foreachBatch(cap), spark):
+            pass
+    finally:
+        shutil.rmtree(d)
     return spark.createDataFrame(
         [(b, c[0], c[1]) for b, c in sorted(counts.items())],
         "batch_id long, n_on_time long, n_late long",
@@ -648,7 +667,11 @@ def x3_idle_timeout_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("event_ts", F.timestamp_millis("ts_ms"))
         .withWatermark("event_ts", "0 seconds")
     )
-    return run_available_now(idle_alerts(stream, IDLE_GAP_MS), spark, mode="update")
+    try:
+        return run_available_now(
+            idle_alerts(stream, IDLE_GAP_MS), spark, mode="update")
+    finally:
+        shutil.rmtree(d)
 
 
 X3_IDLE_ORACLE = f"""
@@ -708,7 +731,10 @@ def s1_file_monitor_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .csv(csv_dir)
     )
     agg = stream.groupBy("user_id").agg(F.count("*").alias("cnt"))
-    return run_available_now(agg, spark, mode="complete")
+    try:
+        return run_available_now(agg, spark, mode="complete")
+    finally:
+        shutil.rmtree(csv_dir)
 
 
 S1_ORACLE = f"""
@@ -867,7 +893,7 @@ def s3_stateful_alert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     straddle them. Oracle: the LCG stream is regenerated in SQL and the
     alert logic replayed as lag(); the whole streaming pipeline, source
     included, is hash-checked."""
-    import time as _time
+    import json
     import uuid as _uuid
 
     from ..sources.pydatasource import register
@@ -886,26 +912,17 @@ def s3_stateful_alert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         deletes, S3_X1_THRESH_MS, key_col="gen_user", ts_ms_col="ts_ms"
     )
     name = f"s3x1_{_uuid.uuid4().hex[:12]}"
-    q = start_stream(
-        alerts.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", _ephemeral_checkpoint())
-        .trigger(processingTime="0 seconds"),
-        spark)
-    try:
-        deadline = _time.monotonic() + 180
-        while _time.monotonic() < deadline:
-            seen = sum(p["numInputRows"] for p in q.recentProgress)
-            last = q.lastProgress
-            if last is not None and last["numInputRows"] == 0 and seen >= S3_X1_N:
-                break
-            _time.sleep(0.3)
-        else:
-            raise TimeoutError("generator alert stream did not drain")
-    finally:
-        q.stop()
-    return take_memory_sink(spark, name)
+    with drain(
+        alerts.writeStream.outputMode("update").format("memory").queryName(name),
+        spark, available_now=False,
+    ) as (q, _):
+        out = take_memory_sink(spark, name)
+    # Offsets are row indices, so the last batch's committed end offset
+    # is the number of rows the drain consumed.
+    done = json.loads(q.lastProgress.json)["sources"][0]["endOffset"]["index"]
+    if done != S3_X1_N:
+        raise RuntimeError(f"generator alert stream drained {done}/{S3_X1_N} rows")
+    return out
 
 
 def _s3_x1_oracle() -> str:
@@ -939,21 +956,17 @@ def statestore_read_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("cnt"),
         F.sum(F.col("value").cast("decimal(18,4)")).alias("sv"),
     )
-    ckpt = _ephemeral_checkpoint()
-    # noop sink: the answer is the state in the checkpoint, not the output
-    q = start_stream(
-        agg.writeStream.outputMode("complete")
-        .format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
-        spark)
-    q.awaitTermination(300)
-    state = spark.read.format("statestore").option("path", ckpt).load()
-    return state.select(
-        F.col("key.user_id").alias("user_id"),
-        F.col("value.count").alias("cnt"),
-        F.col("value.sum").cast("double").alias("total_value"),
-    )
+    # noop sink: the answer is the state in the checkpoint, not the
+    # output, so it is read before the drain deletes the checkpoint
+    with drain(
+        agg.writeStream.outputMode("complete").format("noop"), spark,
+    ) as (_, ckpt):
+        state = spark.read.format("statestore").option("path", ckpt).load()
+        return state.select(
+            F.col("key.user_id").alias("user_id"),
+            F.col("value.count").alias("cnt"),
+            F.col("value.sum").cast("double").alias("total_value"),
+        ).localCheckpoint(eager=True)
 
 
 STATESTORE_ORACLE = """
@@ -1537,7 +1550,7 @@ def j3_first_touch_pipeline(
 
 def j3_first_touch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FIVE state stores (3 window aggs + 2 joins): 2 partitions, the
-    # measured optimum for this chain (see start_stream).
+    # measured optimum for this chain (see sinks.drain).
     return run_available_now(
         j3_first_touch_pipeline(spark, sf_dir), spark, mode="append", cap=2)
 

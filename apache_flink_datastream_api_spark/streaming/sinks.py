@@ -7,19 +7,27 @@ Semantics notes vs the reference:
 - K2 Kafka sink: Spark is at-least-once (no 2PC producer like Flink's
   ``Semantic.EXACTLY_ONCE``); end-to-end exactly-once needs an idempotent
   or transactional downstream — documented gap, not hidden.
-- ``run_available_now`` is the bounded-replay harness: process everything
-  available, then stop — the batch-equivalence bridge used by tests and
-  the oracle-checked streaming queries. Every bounded drain starts
-  through ``start_stream``, which fixes its state partitions; the
-  long-running sinks here keep the session's value (deployment sizing).
+- ``drain`` is the one bounded-replay harness (SURVEY.md §5 strategy 2):
+  it starts a query on a scratch checkpoint with its state partitions
+  fixed, waits until all available input is committed, stops the query
+  and deletes the checkpoint, on every exit path. The reference's
+  programs run forever on durable state; a replay that ends when its
+  function returns takes its checkpoint with it. ``run_available_now``
+  is ``drain`` into a memory sink — the batch-equivalence bridge used by
+  tests and the oracle-checked streaming queries. The long-running sinks
+  here take the caller's durable checkpoint and keep the session's
+  partition count (deployment sizing).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import threading
 import uuid
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
@@ -72,77 +80,32 @@ def to_kafka(
     return writer.start()
 
 
-def _ephemeral_checkpoint() -> str:
-    """RAM-backed checkpoint dir for BOUNDED replays: the state store +
-    commit log of an availableNow run is scratch space that dies with
-    the result, so tmpfs (when present) removes disk fsyncs from every
-    micro-batch's state commit. Durable production queries pass their
-    own real checkpointLocation instead — never this."""
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    return tempfile.mkdtemp(prefix="ckpt_", dir=base)
-
-
-def _record_state_metrics(q) -> None:
-    """When SPARK_GRAFT_STATE_METRICS_FILE is set, append one JSONL record
-    summarizing the drained query's state-store footprint across its
-    micro-batches (per state operator: peak numRowsTotal/memoryUsedBytes,
-    total rows removed, batch count). This is how SCALING.md's streaming
-    state-growth table is measured — watermark-bounded operators must
-    hold PEAK state ∝ watermark window, not corpus size. No-op (and
-    fail-soft) outside that measurement harness."""
-    path = os.environ.get("SPARK_GRAFT_STATE_METRICS_FILE")
-    if not path:
-        return
-    try:
-        import json
-
-        ops: dict[str, dict] = {}
-        progress = q.recentProgress or []
-        for p in progress:
-            d = json.loads(p.json) if hasattr(p, "json") else p
-            for i, so in enumerate(d.get("stateOperators", [])):
-                key = f"{i}:{so.get('operatorName', 'state')}"
-                cur = ops.setdefault(key, {
-                    "operator": so.get("operatorName", "state"),
-                    "peak_rows": 0, "peak_bytes": 0,
-                    "rows_removed": 0, "rows_dropped_late": 0,
-                })
-                cur["peak_rows"] = max(cur["peak_rows"], so.get("numRowsTotal", 0))
-                cur["peak_bytes"] = max(
-                    cur["peak_bytes"], so.get("memoryUsedBytes", 0))
-                cur["rows_removed"] += so.get("numRowsRemoved", 0)
-                cur["rows_dropped_late"] += so.get(
-                    "numRowsDroppedByWatermark", 0)
-        rec = {
-            "label": os.environ.get("SPARK_GRAFT_STATE_METRICS_LABEL", ""),
-            "n_batches": len(progress),
-            "rows_in": sum(
-                (json.loads(p.json) if hasattr(p, "json") else p)
-                .get("numInputRows", 0) for p in progress),
-            # per-trigger emitted rows: append-mode queries must hold this
-            # ∝ sessions CLOSED that trigger, while complete mode rewrites
-            # the cumulative table every trigger (the contrast SCALING.md's
-            # output-growth row pins).
-            "sink_rows_per_batch": [
-                ((json.loads(p.json) if hasattr(p, "json") else p)
-                 .get("sink", {}) or {}).get("numOutputRows", -1)
-                for p in progress
-            ],
-            "operators": list(ops.values()),
-        }
-        with open(path, "a") as f:
-            f.write(json.dumps(rec) + "\n")
-    except Exception:
-        pass
-
+# Where bounded drains keep their scratch checkpoints: tmpfs when present,
+# so no micro-batch's state commit waits on a disk.
+SCRATCH_BASE = "/dev/shm" if os.path.isdir("/dev/shm") else None
 
 _START_LOCK = threading.Lock()
 
 
-def start_stream(
-    writer: DataStreamWriter, spark: SparkSession, cap: int = 8
-) -> StreamingQuery:
-    """Start a bounded drain with its state partitions fixed at start.
+@contextmanager
+def drain(
+    writer: DataStreamWriter,
+    spark: SparkSession,
+    cap: int = 8,
+    available_now: bool = True,
+) -> Iterator[tuple[StreamingQuery, str]]:
+    """Run ``writer``'s query as a bounded drain: start it on a scratch
+    checkpoint, wait until all available input is committed, stop it, and
+    yield the stopped query and its checkpoint. The checkpoint is deleted
+    when the ``with`` block exits, however it exits; a result that reads
+    the checkpoint must be materialised inside the block.
+
+    ``available_now=False`` runs a ``"0 seconds"`` processing-time trigger
+    instead of availableNow: the Python data source's availableNow end
+    offset is computed once, which collapses a capped generator into one
+    batch. Either way ``processAllAvailable()`` returns only at a trigger
+    with nothing left to run (after availableNow's final no-data batch)
+    or once the query has terminated, and re-raises the query's error.
 
     State stores are partitioned by ``spark.sql.shuffle.partitions`` when
     the query starts (recorded in its offset log; AQE never coalesces
@@ -164,18 +127,30 @@ def start_stream(
 
     The value is set only around ``writer.start()``: the query clones
     the session there (``StreamExecution``) and keeps ``n`` for life,
-    while the session is restored before this returns. The lock
-    serialises concurrent starts."""
-    key = "spark.sql.shuffle.partitions"
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    with _START_LOCK:
-        prev = spark.conf.get(key)
-        n = int(env) if env else min(int(prev), cap)
-        spark.conf.set(key, str(n))
+    while the session gets its value back as soon as ``start()``
+    returns. The lock serialises concurrent starts."""
+    ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=SCRATCH_BASE)
+    try:
+        writer = writer.option("checkpointLocation", ckpt)
+        writer = (writer.trigger(availableNow=True) if available_now
+                  else writer.trigger(processingTime="0 seconds"))
+        key = "spark.sql.shuffle.partitions"
+        env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
+        with _START_LOCK:
+            prev = spark.conf.get(key)
+            n = int(env) if env else min(int(prev), cap)
+            spark.conf.set(key, str(n))
+            try:
+                q = writer.start()
+            finally:
+                spark.conf.set(key, prev)
         try:
-            return writer.start()
+            q.processAllAvailable()
         finally:
-            spark.conf.set(key, prev)
+            q.stop()
+        yield q, ckpt
+    finally:
+        shutil.rmtree(ckpt)
 
 
 def take_memory_sink(spark: SparkSession, name: str) -> DataFrame:
@@ -195,20 +170,14 @@ def run_available_now(
     df: DataFrame,
     spark: SparkSession,
     mode: str = "update",
-    timeout_s: int = 300,
     cap: int = 8,
 ) -> DataFrame:
-    """Run a streaming DataFrame to completion on available data and return
-    the collected result as a batch DataFrame (memory sink). ``cap``
-    bounds the state partitions (see :func:`start_stream`)."""
+    """Drain a streaming DataFrame over all available data into a memory
+    sink and return the result as a batch DataFrame. ``cap`` bounds the
+    state partitions (see :func:`drain`)."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    q = start_stream(
-        df.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", _ephemeral_checkpoint())
-        .trigger(availableNow=True),
-        spark, cap)
-    q.awaitTermination(timeout_s)
-    _record_state_metrics(q)
-    return take_memory_sink(spark, name)
+    with drain(
+        df.writeStream.outputMode(mode).format("memory").queryName(name),
+        spark, cap,
+    ):
+        return take_memory_sink(spark, name)

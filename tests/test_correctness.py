@@ -3,25 +3,45 @@ bit-for-bit (the driver's t2 gate, run locally at a smaller sf)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from apache_flink_datastream_api_spark.registry import all_queries
+from apache_flink_datastream_api_spark.streaming import sinks
 
 from .conftest import SF_DIR, assert_matches_oracle
 
 SPECS = list(all_queries().values())
 
 
+@pytest.fixture
+def drain_base(tmp_path, monkeypatch):
+    """Bounded drains keep their scratch checkpoints in a dir of this test's
+    own, so no other process's drains show up in it."""
+    monkeypatch.setattr(sinks, "SCRATCH_BASE", str(tmp_path))
+    return tmp_path
+
+
+def assert_drains_left_nothing(spark, base) -> None:
+    """A query that returned has stopped every stream it started and
+    deleted every checkpoint."""
+    assert not spark.streams.active, [q.name for q in spark.streams.active]
+    assert not os.listdir(base)
+
+
 @pytest.mark.parametrize("spec", [s for s in SPECS if s.oracle], ids=lambda s: s.name)
-def test_oracle_match(spark, oracle_con, spec):
+def test_oracle_match(spark, oracle_con, spec, drain_base):
     assert_matches_oracle(spec.fn(spark, SF_DIR), oracle_con, spec.oracle)
+    assert_drains_left_nothing(spark, drain_base)
 
 
 @pytest.mark.parametrize("spec", [s for s in SPECS if s.oracle is None], ids=lambda s: s.name)
-def test_rows_only(spark, spec):
+def test_rows_only(spark, spec, drain_base):
     df = spec.fn(spark, SF_DIR)
     assert df.schema is not None
     assert df.count() >= 0
+    assert_drains_left_nothing(spark, drain_base)
 
 
 def test_bench_headline_queries_registered():

@@ -3,8 +3,6 @@ multi-sink fan-out, rate-source generators."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from apache_flink_datastream_api_spark.operators.skew import salted_agg
@@ -64,11 +62,12 @@ def test_salted_agg_matches_plain(spark):
     assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
 
 
-def test_fanout_single_pass_multi_sink(spark):
+def test_fanout_single_pass_multi_sink(spark, tmp_path):
     """One streaming query delivers each batch to two sinks."""
     import os
 
-    src_dir = tempfile.mkdtemp(prefix="fan_src_")
+    src_dir = tmp_path / "src"
+    src_dir.mkdir()
     for i in range(2):
         with open(os.path.join(src_dir, f"f{i}.csv"), "w") as fh:
             for j in range(50):
@@ -76,7 +75,7 @@ def test_fanout_single_pass_multi_sink(spark):
     stream = (
         spark.readStream.schema("id long, user string")
         .option("maxFilesPerTrigger", 1)
-        .csv(src_dir)
+        .csv(str(src_dir))
     )
     seen = {"a": 0, "b": 0, "batches": 0}
 
@@ -88,14 +87,14 @@ def test_fanout_single_pass_multi_sink(spark):
         seen["b"] += df.count()
 
     q = fanout_sinks(
-        stream, [sink_a, sink_b], tempfile.mkdtemp(prefix="ckpt_"), available_now=True
+        stream, [sink_a, sink_b], str(tmp_path / "ckpt"), available_now=True
     )
     q.awaitTermination(300)
     assert seen["a"] == 100 and seen["b"] == 100
     assert seen["batches"] == 2  # maxFilesPerTrigger=1 -> one batch per file
 
 
-def test_rate_generators_schema_and_domains(spark):
+def test_rate_generators_schema_and_domains(spark, tmp_path):
     """S3 generators: run one short micro-batch, check schema + domains."""
     from apache_flink_datastream_api_spark.streaming.sources import (
         ACTIONS,
@@ -122,7 +121,7 @@ def test_rate_generators_schema_and_domains(spark):
 
     q = (
         audit.writeStream.foreachBatch(check)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     import time
@@ -186,9 +185,8 @@ def test_observation_audit_counts_no_extra_scan(spark):
     assert n_kept == want.n_pass
 
 
-def test_observation_metrics_in_streaming_progress(spark):
+def test_observation_metrics_in_streaming_progress(spark, tmp_path):
     """Streaming observe: per-micro-batch metrics in observedMetrics."""
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
@@ -214,7 +212,7 @@ def test_observation_metrics_in_streaming_progress(spark):
         observed.writeStream.outputMode("append")
         .format("memory")
         .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_obs_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )

@@ -6,6 +6,7 @@ late-data capture, sinks."""
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 import pytest
@@ -1127,9 +1128,65 @@ def test_stream_source_dir_restamps_tied_part_mtimes(tmp_path):
         for p in links
     ]
     assert all(b > a for a, b in zip(ms, ms[1:])), ms
+    # one dir per source layout: a second call reuses it
+    assert _stream_source_dir(str(tmp_path), "events") == stream_dir
+    shutil.rmtree(stream_dir)
 
 
-def test_watermark_bounded_state_invariant(spark, tmp_path, monkeypatch):
+def test_stream_source_dir_concurrent_callers_share_one_dir(tmp_path):
+    """Concurrent first calls for one source layout all get the same
+    complete symlink dir, and the losers' build dirs are removed."""
+    import glob
+    import sys
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from apache_flink_datastream_api_spark.streaming.queries import (
+        _stream_source_dir,
+    )
+
+    src = tmp_path / "events.parquet"
+    src.mkdir()
+    for i in range(3):
+        pq.write_table(pa.table({"x": [i]}), str(src / f"part-{i:04d}.parquet"))
+    got, errors = [], []
+    start = threading.Barrier(16)
+
+    def call():
+        start.wait(timeout=60)
+        try:
+            got.append(_stream_source_dir(str(tmp_path), "events"))
+        except Exception as ex:  # reported by the assertion below
+            errors.append(ex)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=call) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(got) == 16 and len(set(got)) == 1, got
+    stream_dir = got[0]
+    assert sorted(os.listdir(stream_dir)) == [
+        f"part-{i:04d}.parquet" for i in range(3)]
+    leftovers = [
+        d for d in glob.glob(os.path.join(tempfile.gettempdir(), ".events_stream_*"))
+        if any(os.readlink(os.path.join(d, p)).startswith(str(src))
+               for p in os.listdir(d))
+    ]
+    shutil.rmtree(stream_dir)
+    assert not leftovers, leftovers
+
+
+def test_watermark_bounded_state_invariant(spark, tmp_path):
     """The j2 sf1 OOM fix as a pinned number (VERDICT r5 item 4): over a
     multi-file (time-sliced) replay, a windowed AGGREGATE holds ~constant
     state (one row per open window) and a watermarked stream-stream JOIN
@@ -1143,17 +1200,17 @@ def test_watermark_bounded_state_invariant(spark, tmp_path, monkeypatch):
     if not os.path.isdir(leg):
         pytest.skip("scaled multi-file leg not present")
     out = tmp_path / "state.jsonl"
-    monkeypatch.setenv("SPARK_GRAFT_STATE_METRICS_FILE", str(out))
 
     from apache_flink_datastream_api_spark.streaming.queries import (
         j2_join_then_window_stream,
         w3_sliding_stream,
     )
+    from scripts.state_metrics import recording
 
-    monkeypatch.setenv("SPARK_GRAFT_STATE_METRICS_LABEL", "w3")
-    w3_sliding_stream(spark, leg).collect()
-    monkeypatch.setenv("SPARK_GRAFT_STATE_METRICS_LABEL", "j2")
-    j2_join_then_window_stream(spark, leg).collect()
+    with recording(spark, str(out), "w3"):
+        w3_sliding_stream(spark, leg).collect()
+    with recording(spark, str(out), "j2"):
+        j2_join_then_window_stream(spark, leg).collect()
 
     recs = [json.loads(l) for l in open(out)]
     w3 = next(r for r in recs if r["label"] == "w3")
@@ -1185,9 +1242,6 @@ def test_processing_time_timeout_flush(spark, tmp_path):
     and state removed after the flush."""
     import time
 
-    from apache_flink_datastream_api_spark.streaming.sinks import (
-        _ephemeral_checkpoint,
-    )
     from apache_flink_datastream_api_spark.streaming.state import buffered_flush
 
     src = tmp_path / "flush_src"
@@ -1207,7 +1261,7 @@ def test_processing_time_timeout_flush(spark, tmp_path):
         flushed.writeStream.outputMode("append")
         .format("memory")
         .queryName("pt_flush")
-        .option("checkpointLocation", _ephemeral_checkpoint())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(processingTime="500 milliseconds")
         .start()
     )
@@ -1266,7 +1320,7 @@ def test_append_session_watermark_tie_emitted(spark, tmp_path):
     assert sorted((r.user_id, r.end_ms) for r in out) == [(1, 11000)]
 
 
-def test_append_session_multibatch_parity(spark, tmp_path, monkeypatch):
+def test_append_session_multibatch_parity(spark, tmp_path):
     """Production contract of the append twins over a REAL multi-batch
     replay (time-sliced multi-file leg): the drained append-mode result
     equals the batch closed-session set, sessions are emitted
@@ -1284,13 +1338,14 @@ def test_append_session_multibatch_parity(spark, tmp_path, monkeypatch):
         w4_session_append_stream,
     )
 
+    from scripts.state_metrics import recording
+
     out = tmp_path / "state.jsonl"
-    monkeypatch.setenv("SPARK_GRAFT_STATE_METRICS_FILE", str(out))
-    monkeypatch.setenv("SPARK_GRAFT_STATE_METRICS_LABEL", "w4_append")
-    got = _sorted_rows(
-        w4_session_append_stream(spark, leg),
-        ["user_id", "session_start_ms", "session_end_ms", "cnt"],
-    )
+    with recording(spark, str(out), "w4_append"):
+        got = _sorted_rows(
+            w4_session_append_stream(spark, leg),
+            ["user_id", "session_start_ms", "session_end_ms", "cnt"],
+        )
 
     # batch analog: same session_window plan on a batch read, restricted
     # to sessions the final watermark (max ts - delay) has closed
@@ -1631,3 +1686,50 @@ def test_table_stream_names_a_renamed_column(spark, tmp_path, table, old, new):
         str(tmp_path / f"{table}.parquet"))
     with pytest.raises(ValueError, match=f"'{old}'.*'{new}'"):
         _table_stream(spark, str(tmp_path), table)
+
+
+# --- the bounded drain contract ----------------------------------------------
+
+@pytest.fixture
+def drain_source(tmp_path, monkeypatch):
+    """A two-row CSV stream source; drains keep their checkpoints under
+    ``tmp_path/drains``, which is returned with it."""
+    from apache_flink_datastream_api_spark.streaming import sinks
+
+    base = tmp_path / "drains"
+    base.mkdir()
+    monkeypatch.setattr(sinks, "SCRATCH_BASE", str(base))
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "part-000.csv").write_text("1\n2\n")
+    return str(src), base
+
+
+def test_drain_yields_stopped_query_and_deletes_its_checkpoint(spark, drain_source):
+    from apache_flink_datastream_api_spark.streaming.sinks import drain
+
+    src, base = drain_source
+    stream = spark.readStream.schema("x long").csv(src)
+    seen = []
+    writer = stream.writeStream.foreachBatch(
+        lambda df, _: seen.extend(r.x for r in df.collect()))
+    with drain(writer, spark) as (q, ckpt):
+        assert not q.isActive
+        assert os.listdir(os.path.join(ckpt, "commits"))
+    assert sorted(seen) == [1, 2]
+    assert not os.listdir(base)
+    assert not spark.streams.active
+
+
+def test_failed_drain_reraises_and_leaves_no_checkpoint(spark, drain_source):
+    from pyspark.errors import StreamingQueryException
+
+    src, base = drain_source
+    stream = spark.readStream.schema("x long").csv(src)
+    boom = stream.select(
+        F.when(F.col("x") > 1, F.raise_error(F.lit("drain failure probe")))
+        .otherwise(F.col("x")).alias("x"))
+    with pytest.raises(StreamingQueryException, match="drain failure probe"):
+        run_available_now(boom, spark, mode="append")
+    assert not os.listdir(base)
+    assert not spark.streams.active

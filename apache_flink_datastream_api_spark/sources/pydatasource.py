@@ -43,7 +43,7 @@ from pyspark.sql.types import (
 )
 
 from .fixtures import BASE_TS, ENTITIES, OPERATIONS, USERS
-from ..streaming.sinks import drain, take_memory_sink
+from ..streaming.sinks import drain, drain_to_memory
 
 _A, _C, _M = 1103515245, 12345, 2**31
 
@@ -474,8 +474,6 @@ def s3_generator_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3 as a micro-batch stream: offset-tracked generation drained over
     several real micro-batches, complete-mode aggregation (batching-
     invariant final table == batch oracle)."""
-    import uuid
-
     register(spark)
     n = 3000
     stream = (
@@ -484,13 +482,8 @@ def s3_generator_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("rowsPerBatch", 1000)
         .load()
     )
-    name = f"gen_{uuid.uuid4().hex[:12]}"
-    with drain(
-        _gen_agg(stream).writeStream.outputMode("complete")
-        .format("memory").queryName(name),
-        spark, cap=4, available_now=False,
-    ):
-        out = take_memory_sink(spark, name)
+    out, _ = drain_to_memory(
+        _gen_agg(stream), spark, "complete", cap=4, available_now=False)
     done = out.agg(F.sum("cnt")).collect()[0][0]
     if done != n:
         raise RuntimeError(f"generator stream drained {done}/{n} rows")
@@ -501,8 +494,6 @@ def s3_generator_simple_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3 through the SIMPLE stream-reader API (driver-side prefetch,
     readBetweenOffsets replay) — same bounded drain and regeneration
     oracle as the partitioned stream variant."""
-    import uuid
-
     register(spark)
     n = 2000
     stream = (
@@ -511,13 +502,8 @@ def s3_generator_simple_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("rowsPerBatch", 500)
         .load()
     )
-    name = f"gens_{uuid.uuid4().hex[:12]}"
-    with drain(
-        _gen_agg(stream).writeStream.outputMode("complete")
-        .format("memory").queryName(name),
-        spark, cap=4, available_now=False,
-    ):
-        out = take_memory_sink(spark, name)
+    out, _ = drain_to_memory(
+        _gen_agg(stream), spark, "complete", cap=4, available_now=False)
     done = out.agg(F.sum("cnt")).collect()[0][0]
     if done != n:
         raise RuntimeError(f"simple stream drained {done}/{n} rows")

@@ -25,7 +25,7 @@ from ..registry import QuerySpec
 from ..sources.tables import (
     load_table, nanos_to_timestamps, read_schema, set_read_conf, table_path,
 )
-from .sinks import drain, run_available_now, take_memory_sink
+from .sinks import drain, drain_to_memory, run_available_now
 from .state import interval_alerts, session_durations
 
 
@@ -244,13 +244,10 @@ def x2_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- J1 idiomatic: watermarked stream-stream interval join -----------------
 
-def j1_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's window join (``chapter3/WindowJoins.java:110-144``)
-    in its idiomatic Structured Streaming form: two watermarked streams,
-    inner equi-join on the key plus an event-time interval condition
-    (SURVEY.md §2.6 J1 option (a); the window-bucket option (b) is the
-    batch-checked ``j1_window_join``). State on both sides is bounded by
-    the watermark — the 100 TB shape for unbounded joins."""
+def _view_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Views joined to the same user's purchases 0-10 minutes later, both
+    streams watermarked 1 hour, as join type ``how``. Output columns:
+    (v_user, v_ts) and, unless ``how`` is a semi join, (p_user, p_ts)."""
     views = (
         _events_stream(spark, sf_dir)
         .where(F.col("event_type") == "view")
@@ -263,12 +260,23 @@ def j1_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr("user_id AS p_user", "ts AS p_ts")
         .withWatermark("p_ts", "1 hour")
     )
-    joined = views.join(
+    return views.join(
         purchases,
         (F.col("v_user") == F.col("p_user"))
         & (F.col("p_ts") >= F.col("v_ts"))
         & (F.col("p_ts") < F.col("v_ts") + F.expr("INTERVAL 10 MINUTES")),
-    ).select(
+        how,
+    )
+
+
+def j1_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's window join (``chapter3/WindowJoins.java:110-144``)
+    in its idiomatic Structured Streaming form: two watermarked streams,
+    inner equi-join on the key plus an event-time interval condition
+    (SURVEY.md §2.6 J1 option (a); the window-bucket option (b) is the
+    batch-checked ``j1_window_join``). State on both sides is bounded by
+    the watermark — the 100 TB shape for unbounded joins."""
+    joined = _view_purchase_join(spark, sf_dir, "inner").select(
         F.col("v_user").alias("user_id"),
         F.unix_millis("v_ts").alias("view_ts_ms"),
         F.unix_millis("p_ts").alias("purchase_ts_ms"),
@@ -298,25 +306,7 @@ def j1_outer_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     unmatched views younger than the final watermark are held back, which
     the oracle models explicitly with the same cutoff. State on both sides
     stays watermark-bounded — the 100 TB shape for outer stream joins."""
-    views = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "view")
-        .selectExpr("user_id AS v_user", "ts AS v_ts")
-        .withWatermark("v_ts", "1 hour")
-    )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .selectExpr("user_id AS p_user", "ts AS p_ts")
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = views.join(
-        purchases,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("v_ts"))
-        & (F.col("p_ts") < F.col("v_ts") + F.expr("INTERVAL 10 MINUTES")),
-        "left_outer",
-    ).select(
+    joined = _view_purchase_join(spark, sf_dir, "left_outer").select(
         F.col("v_user").alias("user_id"),
         F.unix_millis("v_ts").alias("view_ts_ms"),
         F.unix_millis("p_ts").alias("purchase_ts_ms"),
@@ -354,25 +344,7 @@ def j1_semi_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXISTS. Matched rows emit immediately (no watermark gating — only
     null-padded outer rows wait for eviction), carrying left columns only;
     state on both sides stays watermark-bounded."""
-    views = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "view")
-        .selectExpr("user_id AS v_user", "ts AS v_ts")
-        .withWatermark("v_ts", "1 hour")
-    )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .selectExpr("user_id AS p_user", "ts AS p_ts")
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = views.join(
-        purchases,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("v_ts"))
-        & (F.col("p_ts") < F.col("v_ts") + F.expr("INTERVAL 10 MINUTES")),
-        "left_semi",
-    ).select(
+    joined = _view_purchase_join(spark, sf_dir, "left_semi").select(
         F.col("v_user").alias("user_id"),
         F.unix_millis("v_ts").alias("view_ts_ms"),
     )
@@ -399,25 +371,7 @@ def j1_full_outer_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself (the latest view it could match carries ts = p_ts). The oracle
     models both cutoffs against the final watermark
     min(max view ts, max purchase ts) - 1 h."""
-    views = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "view")
-        .selectExpr("user_id AS v_user", "ts AS v_ts")
-        .withWatermark("v_ts", "1 hour")
-    )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .selectExpr("user_id AS p_user", "ts AS p_ts")
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = views.join(
-        purchases,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("v_ts"))
-        & (F.col("p_ts") < F.col("v_ts") + F.expr("INTERVAL 10 MINUTES")),
-        "full_outer",
-    ).select(
+    joined = _view_purchase_join(spark, sf_dir, "full_outer").select(
         F.coalesce("v_user", "p_user").alias("user_id"),
         F.unix_millis("v_ts").alias("view_ts_ms"),
         F.unix_millis("p_ts").alias("purchase_ts_ms"),
@@ -751,26 +705,8 @@ def j2_join_then_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the downstream append window finalizes at the joint watermark
     (min over both inputs' max ts, minus the delay) — the oracle applies
     that cutoff."""
-    views = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "view")
-        .selectExpr("user_id AS v_user", "ts AS v_ts")
-        .withWatermark("v_ts", "1 hour")
-    )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .selectExpr("user_id AS p_user", "ts AS p_ts")
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = views.join(
-        purchases,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("v_ts"))
-        & (F.col("p_ts") < F.col("v_ts") + F.expr("INTERVAL 10 MINUTES")),
-    )
     agg = (
-        joined.groupBy(F.window("v_ts", "1 hour").alias("w"))
+        _view_purchase_join(spark, sf_dir, "inner").groupBy(F.window("v_ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n_conversions"))
         .select(
             F.unix_millis("w.start").alias("window_start_ms"), "n_conversions"
@@ -894,7 +830,6 @@ def s3_stateful_alert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     alert logic replayed as lag(); the whole streaming pipeline, source
     included, is hash-checked."""
     import json
-    import uuid as _uuid
 
     from ..sources.pydatasource import register
 
@@ -911,12 +846,7 @@ def s3_stateful_alert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     alerts = interval_alerts(
         deletes, S3_X1_THRESH_MS, key_col="gen_user", ts_ms_col="ts_ms"
     )
-    name = f"s3x1_{_uuid.uuid4().hex[:12]}"
-    with drain(
-        alerts.writeStream.outputMode("update").format("memory").queryName(name),
-        spark, available_now=False,
-    ) as (q, _):
-        out = take_memory_sink(spark, name)
+    out, q = drain_to_memory(alerts, spark, available_now=False)
     # Offsets are row indices, so the last batch's committed end offset
     # is the number of rows the drain consumed.
     done = json.loads(q.lastProgress.json)["sources"][0]["endOffset"]["index"]

@@ -12,11 +12,13 @@ Semantics notes vs the reference:
   fixed, waits until all available input is committed, stops the query
   and deletes the checkpoint, on every exit path. The reference's
   programs run forever on durable state; a replay that ends when its
-  function returns takes its checkpoint with it. ``run_available_now``
-  is ``drain`` into a memory sink — the batch-equivalence bridge used by
-  tests and the oracle-checked streaming queries. The long-running sinks
-  here take the caller's durable checkpoint and keep the session's
-  partition count (deployment sizing).
+  function returns takes its checkpoint with it. ``drain_to_memory``
+  is ``drain`` into a memory sink whose view it drops on every exit
+  path, and ``run_available_now`` its result alone — the
+  batch-equivalence bridge used by tests and the oracle-checked
+  streaming queries. The long-running sinks here take the caller's
+  durable checkpoint and keep the session's partition count
+  (deployment sizing).
 """
 
 from __future__ import annotations
@@ -153,17 +155,30 @@ def drain(
         shutil.rmtree(ckpt)
 
 
-def take_memory_sink(spark: SparkSession, name: str) -> DataFrame:
-    """Materialize a stopped memory sink's table and drop it from the
-    catalog. Without this, every bounded replay leaks its full result set
-    into the session catalog for the session's lifetime — in a long
-    session (bench: hundreds of streaming runs) the accumulated tables
-    GC-pressure the JVM until streaming runs take 5-10x longer.
-    localCheckpoint blocks are freed by the ContextCleaner once the
-    returned DataFrame is unreferenced."""
-    out = spark.table(name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    return out
+def drain_to_memory(
+    df: DataFrame,
+    spark: SparkSession,
+    mode: str = "update",
+    cap: int = 8,
+    available_now: bool = True,
+) -> tuple[DataFrame, StreamingQuery]:
+    """:func:`drain` ``df`` into a memory sink and return the sink's rows
+    as a batch DataFrame, with the stopped query. Spark registers the
+    sink's temp view when the query starts; it is dropped on every exit
+    path. Without that, every bounded replay (and every failed one) leaks
+    its full result set into the session catalog for the session's
+    lifetime — in a long session (bench: hundreds of streaming runs) the
+    accumulated tables GC-pressure the JVM until streaming runs take
+    5-10x longer. The rows are materialised with localCheckpoint, whose
+    blocks the ContextCleaner frees once the returned DataFrame is
+    unreferenced."""
+    name = f"mem_{uuid.uuid4().hex[:12]}"
+    writer = df.writeStream.outputMode(mode).format("memory").queryName(name)
+    try:
+        with drain(writer, spark, cap, available_now) as (q, _):
+            return spark.table(name).localCheckpoint(eager=True), q
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def run_available_now(
@@ -175,9 +190,4 @@ def run_available_now(
     """Drain a streaming DataFrame over all available data into a memory
     sink and return the result as a batch DataFrame. ``cap`` bounds the
     state partitions (see :func:`drain`)."""
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    with drain(
-        df.writeStream.outputMode(mode).format("memory").queryName(name),
-        spark, cap,
-    ):
-        return take_memory_sink(spark, name)
+    return drain_to_memory(df, spark, mode, cap)[0]

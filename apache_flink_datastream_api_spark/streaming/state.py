@@ -1,78 +1,97 @@
-"""Keyed per-record state machines (SURVEY.md §2.8 X1/X2) as
-``applyInPandasWithState`` processors.
+"""Keyed per-record state machines (SURVEY.md §2.8 X1/X2 and the
+operators built on the same pattern), all run by one helper,
+:func:`keyed_state` — the package's only ``applyInPandasWithState`` call.
 
 Flink's ``RichMapFunction`` + ``ValueState`` processes one record at a
 time; Spark's state API hands each key a *batch* of rows per micro-batch.
-The processors therefore sort each batch by event time and fold the same
-per-record logic over it — identical outputs when replayed, batched
-emission granularity (the documented semantic difference, SURVEY.md §4).
+``keyed_state`` therefore concatenates a key's batch, sorts it by
+``(ts_ms[, event_id])`` and hands it to the operator's fold, which runs
+the same per-record logic over it — identical outputs when replayed,
+batched emission granularity (the documented semantic difference,
+SURVEY.md §4). The helper also types the key column from the input,
+carries ``event_id`` (the sort's tie-break) through the projection and
+builds each output frame from the output schema's column names, so an
+operator states its output and state schemas once each, as DDL strings.
+The state schemas are checkpoint format: changing one makes existing
+checkpoints unreadable (tests/test_streaming.py pins them).
+
+Timers: X1/X2 and most operators here use none. ``idle_alerts``
+registers an event-time timer (EventTimeTimeout, Flink's ``onTimer``)
+and ``buffered_flush`` a processing-time one (ProcessingTimeTimeout);
+when a timer fires the fold sees ``state.hasTimedOut`` and no rows.
 
 State backend: default HDFS-backed state store locally; at scale switch to
 RocksDB via ``spark.sql.streaming.stateStore.providerClass`` — state per
 key is a single row here, so the store stays tiny regardless of stream
 length (the eviction story is timeouts, configured by the caller).
 
-Keys are polymorphic: callers pass the key column and its Spark type
-(audit streams key by a string user, the driver's events by a long
-user_id); output schemas are assembled per call.
-
 API choice: Spark 4's ``transformWithStateInPandas`` (value/list/map
 state + event-time timers — the closest Flink-timer parity) was
 evaluated and works API-wise, but its streaming Python runner requires
 the ``protobuf`` package, absent in this environment; verified 2026-08
 to crash with STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE.
-``applyInPandasWithState`` covers every reference semantic (X1/X2 use no
-timers) and stays the portable choice.
+``applyInPandasWithState`` covers every reference semantic and stays the
+portable choice.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DataType
 
 
-def _sorted(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame:
-    rows = pd.concat(list(pdfs))
-    sort_cols = ["ts_ms", "event_id"] if "event_id" in rows.columns else ["ts_ms"]
-    return rows.sort_values(sort_cols)
+def keyed_state(
+    df: DataFrame,
+    key_col: str,
+    fold: Callable[[pd.DataFrame | None, GroupState], Iterable[tuple]],
+    out: str,
+    state: str,
+    cols: list[str] | None = None,
+    timeout: str = GroupStateTimeout.NoTimeout,
+    mode: str = "update",
+) -> DataFrame:
+    """Run ``fold`` per ``key_col`` group of ``df`` as an
+    ``applyInPandasWithState`` operator.
+
+    ``cols`` is the ``selectExpr`` projection ahead of the grouping, with
+    ``event_id`` appended when ``df`` has it; ``None`` groups ``df`` as
+    it is. ``fold(rows, state)`` gets one micro-batch of the key's rows
+    sorted by ``(ts_ms[, event_id])`` (``None`` when the key's timer
+    fired), updates ``state`` and returns or yields output rows without
+    the key. ``out`` and ``state`` are DDL schemas; the output is the key
+    column, typed as in ``df``, followed by ``out``."""
+    if cols is not None:
+        if "event_id" in df.columns and "event_id" not in cols:
+            cols = [*cols, "event_id"]
+        df = df.selectExpr(*cols)
+    out_schema = DataType.fromDDL(f"{key_col} {dict(df.dtypes)[key_col]}, {out}")
+    names = out_schema.names
+
+    def run(
+        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], st: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        rows = None
+        if not st.hasTimedOut:
+            rows = pd.concat(list(pdfs))
+            rows = rows.sort_values(
+                [c for c in ("ts_ms", "event_id") if c in rows.columns])
+        yield pd.DataFrame([(key[0], *r) for r in fold(rows, st)], columns=names)
+
+    return df.groupBy(key_col).applyInPandasWithState(
+        run,
+        outputStructType=out_schema,
+        stateStructType=state,
+        outputMode=mode,
+        timeoutConf=timeout,
+    )
 
 
 # --- X1: interval alert (StatefulOperations.java:84-129 semantics) ---------
-
-X1_STATE = StructType([StructField("last_ts", LongType())])
-
-
-def make_interval_alert(threshold_ms: int, key_name: str):
-    """Per key: remember the previous matching event's timestamp; alert
-    when the next one arrives within threshold_ms."""
-
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        rows = _sorted(pdfs)
-        last = state.get[0] if state.exists else None
-        out: list[tuple[Any, int, int]] = []
-        for ts in rows["ts_ms"]:
-            ts = int(ts)
-            if last is not None and ts - last < threshold_ms:
-                out.append((key[0], ts, ts - last))
-            last = ts
-        state.update((last,))
-        yield pd.DataFrame(out, columns=[key_name, "ts_ms", "diff_ms"])
-
-    return fn
-
 
 def interval_alerts(
     df: DataFrame,
@@ -80,28 +99,24 @@ def interval_alerts(
     key_col: str = "user_id",
     ts_ms_col: str = "ts_ms",
 ) -> DataFrame:
-    """X1 streaming operator: df must contain (key_col, ts_ms_col) already
-    filtered to the alert-relevant events (e.g. operation = 'Delete').
+    """X1 streaming operator: per key, remember the previous event's
+    timestamp and alert when the next one arrives within threshold_ms.
+    df must contain (key_col, ts_ms_col) already filtered to the
+    alert-relevant events (e.g. operation = 'Delete').
     Output: (key_col, ts_ms, diff_ms)."""
-    key_type = dict(df.dtypes)[key_col]
-    cols = [key_col, f"{ts_ms_col} AS ts_ms"]
-    if "event_id" in df.columns and key_col != "event_id":
-        cols.append("event_id")
-    sel = df.selectExpr(*cols)
-    out_schema = StructType(
-        [
-            StructField(key_col, LongType() if key_type == "bigint" else StringType()),
-            StructField("ts_ms", LongType()),
-            StructField("diff_ms", LongType()),
-        ]
-    )
-    return sel.groupBy(key_col).applyInPandasWithState(
-        make_interval_alert(threshold_ms, key_col),
-        outputStructType=out_schema,
-        stateStructType=X1_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+
+    def fold(rows, state):
+        last = state.get[0] if state.exists else None
+        for ts in rows["ts_ms"]:
+            ts = int(ts)
+            if last is not None and ts - last < threshold_ms:
+                yield ts, ts - last
+            last = ts
+        state.update((last,))
+
+    return keyed_state(
+        df, key_col, fold, "ts_ms bigint, diff_ms bigint", "last_ts bigint",
+        cols=[key_col, f"{ts_ms_col} AS ts_ms"])
 
 
 # --- timer parity: idle-gap burst alerts via EventTimeTimeout ---------------
@@ -111,46 +126,6 @@ def interval_alerts(
 # Spark equivalent: the state handler is re-invoked with hasTimedOut=True
 # once the watermark passes the registered timestamp.
 
-TIMEOUT_STATE = StructType(
-    [StructField("last_ts", LongType()), StructField("n_events", LongType())]
-)
-
-
-def make_idle_alert(gap_ms: int, key_name: str):
-    """Per key: group events into bursts separated by >= gap_ms. A burst
-    with a successor event closes inline; a tail burst (no successor yet)
-    closes when the event-time timer fires — Flink's onTimer shape."""
-
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        cols = [key_name, "last_ts_ms", "n_events"]
-        if state.hasTimedOut:
-            last_ts, n = state.get
-            state.remove()
-            yield pd.DataFrame([(key[0], int(last_ts), int(n))], columns=cols)
-            return
-        rows = _sorted(pdfs)
-        last_ts, n = state.get if state.exists else (None, 0)
-        out: list[tuple[Any, int, int]] = []
-        for ts in rows["ts_ms"]:
-            ts = int(ts)
-            if last_ts is not None and ts - last_ts >= gap_ms:
-                out.append((key[0], last_ts, n))
-                n = 0
-            last_ts = ts
-            n += 1
-        state.update((last_ts, n))
-        # EventTimeTimeout requires a timestamp beyond the current
-        # watermark; an already-expired burst fires at the next advance.
-        state.setTimeoutTimestamp(
-            max(last_ts + gap_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        yield pd.DataFrame(out, columns=cols)
-
-    return fn
-
-
 def idle_alerts(
     df: DataFrame,
     gap_ms: int,
@@ -158,45 +133,50 @@ def idle_alerts(
     ts_ms_col: str = "ts_ms",
     event_time_col: str = "event_ts",
 ) -> DataFrame:
-    """Timer-based burst sessionizer. ``df`` must be a streaming frame WITH
-    a watermark on ``event_time_col`` (EventTimeTimeout needs one; the
-    column must survive the projection or the watermark is lost).
+    """Timer-based burst sessionizer: per key, group events into bursts
+    separated by >= gap_ms. A burst with a successor event closes inline;
+    a tail burst closes when the event-time timer fires. ``df`` must be a
+    streaming frame WITH a watermark on ``event_time_col``
+    (EventTimeTimeout needs one; the column must survive the projection
+    or the watermark is lost).
     Output: (key_col, last_ts_ms, n_events), one row per closed burst."""
-    key_type = dict(df.dtypes)[key_col]
-    cols = [key_col, f"{ts_ms_col} AS ts_ms", event_time_col]
-    if "event_id" in df.columns and key_col != "event_id":
-        cols.append("event_id")
-    sel = df.selectExpr(*cols)
-    out_schema = StructType(
-        [
-            StructField(key_col, LongType() if key_type == "bigint" else StringType()),
-            StructField("last_ts_ms", LongType()),
-            StructField("n_events", LongType()),
-        ]
-    )
-    return sel.groupBy(key_col).applyInPandasWithState(
-        make_idle_alert(gap_ms, key_col),
-        outputStructType=out_schema,
-        stateStructType=TIMEOUT_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+
+    def fold(rows, state):
+        if state.hasTimedOut:
+            last_ts, n = state.get
+            state.remove()
+            yield int(last_ts), int(n)
+            return
+        last_ts, n = state.get if state.exists else (None, 0)
+        for ts in rows["ts_ms"]:
+            ts = int(ts)
+            if last_ts is not None and ts - last_ts >= gap_ms:
+                yield last_ts, n
+                n = 0
+            last_ts = ts
+            n += 1
+        state.update((last_ts, n))
+        # EventTimeTimeout requires a timestamp beyond the current
+        # watermark; an already-expired burst fires at the next advance.
+        state.setTimeoutTimestamp(
+            max(last_ts + gap_ms, state.getCurrentWatermarkMs() + 1))
+
+    return keyed_state(
+        df, key_col, fold, "last_ts_ms bigint, n_events bigint",
+        "last_ts bigint, n_events bigint",
+        cols=[key_col, f"{ts_ms_col} AS ts_ms", event_time_col],
+        timeout=GroupStateTimeout.EventTimeTimeout)
 
 
 # --- timer parity: processing-time buffered flush (ProcessingTimeTimeout) ---
 # Flink's OTHER timer clock: ``registerProcessingTimeTimer`` — wall-clock
-# timers independent of event time (the reference never registers one
-# either, but chapter-5-style alerting patterns lean on both clocks).
-# Spark equivalent: ``applyInPandasWithState`` + ProcessingTimeTimeout +
-# ``state.setTimeoutDuration``; the handler is re-invoked with
+# timers independent of event time. Spark equivalent: ProcessingTimeTimeout
+# + ``state.setTimeoutDuration``; the handler is re-invoked with
 # hasTimedOut=True by a no-data micro-batch once wall-clock passes the
 # deadline. Outputs depend on WALL-CLOCK arrival, so this is test-pinned
 # (tests/test_streaming.py::test_processing_time_timeout_flush), never
 # oracle-checked — the documented Flink-parity line between the two
 # timer clocks (event-time timers: idle_alerts above, oracle-checked).
-
-FLUSH_STATE = StructType([StructField("n_events", LongType())])
-
 
 def buffered_flush(
     df: DataFrame, quiet_ms: int, key_col: str = "user_id"
@@ -204,77 +184,23 @@ def buffered_flush(
     """Processing-time-timer operator: one output row per key, emitted
     quiet_ms of WALL CLOCK after its last arrival. ``df`` needs no
     watermark (processing-time timers are event-time-independent)."""
-    key_type = dict(df.dtypes)[key_col]
 
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        cols = [key_col, "n_events"]
+    def fold(rows, state):
         if state.hasTimedOut:
             (n,) = state.get
             state.remove()
-            yield pd.DataFrame([(key[0], int(n))], columns=cols)
+            yield (int(n),)
             return
-        n = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            n += len(pdf)
-        state.update((n,))
+        state.update(((state.get[0] if state.exists else 0) + len(rows),))
         state.setTimeoutDuration(quiet_ms)
-        yield pd.DataFrame([], columns=cols)
 
-    out_schema = StructType(
-        [
-            StructField(key_col, LongType() if key_type == "bigint" else StringType()),
-            StructField("n_events", LongType()),
-        ]
-    )
-    return df.select(key_col).groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=FLUSH_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
+    return keyed_state(
+        df, key_col, fold, "n_events bigint", "n_events bigint",
+        cols=[key_col], timeout=GroupStateTimeout.ProcessingTimeTimeout,
+        mode="append")
 
 
 # --- X2: session durations (CourseUseCase.java:114-180 semantics) ----------
-
-X2_STATE = StructType(
-    [StructField("last_action", StringType()), StructField("last_ts", LongType())]
-)
-
-
-def make_session_durations(logout_action: str, key_name: str):
-    """Per key: emit (prev_action, duration) for each event while a session
-    is open; the logout action clears state (next event starts fresh)."""
-
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        rows = _sorted(pdfs)
-        if state.exists:
-            last_action, last_ts = state.get
-        else:
-            last_action, last_ts = None, None
-        out: list[tuple[Any, str, int, int]] = []
-        for action, ts in zip(rows["action"], rows["ts_ms"]):
-            ts = int(ts)
-            if last_action is not None:
-                out.append((key[0], last_action, ts, ts - last_ts))
-            if action == logout_action:
-                last_action, last_ts = None, None
-            else:
-                last_action, last_ts = action, ts
-        if last_action is None:
-            state.remove()
-        else:
-            state.update((last_action, last_ts))
-        yield pd.DataFrame(
-            out, columns=[key_name, "action", "ts_ms", "duration_ms"]
-        )
-
-    return fn
-
 
 def session_durations(
     df: DataFrame,
@@ -283,27 +209,30 @@ def session_durations(
     action_col: str = "action",
     ts_ms_col: str = "ts_ms",
 ) -> DataFrame:
-    """X2 streaming operator. Output: (key_col, action, ts_ms, duration_ms)."""
-    key_type = dict(df.dtypes)[key_col]
-    cols = [key_col, f"{action_col} AS action", f"{ts_ms_col} AS ts_ms"]
-    if "event_id" in df.columns and key_col != "event_id":
-        cols.append("event_id")
-    sel = df.selectExpr(*cols)
-    out_schema = StructType(
-        [
-            StructField(key_col, LongType() if key_type == "bigint" else StringType()),
-            StructField("action", StringType()),
-            StructField("ts_ms", LongType()),
-            StructField("duration_ms", LongType()),
-        ]
-    )
-    return sel.groupBy(key_col).applyInPandasWithState(
-        make_session_durations(logout_action, key_col),
-        outputStructType=out_schema,
-        stateStructType=X2_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    """X2 streaming operator: per key, emit (prev_action, duration) for
+    each event while a session is open; the logout action clears state
+    (the next event starts fresh).
+    Output: (key_col, action, ts_ms, duration_ms)."""
+
+    def fold(rows, state):
+        last_action, last_ts = state.get if state.exists else (None, None)
+        for action, ts in zip(rows["action"], rows["ts_ms"]):
+            ts = int(ts)
+            if last_action is not None:
+                yield last_action, ts, ts - last_ts
+            if action == logout_action:
+                last_action, last_ts = None, None
+            else:
+                last_action, last_ts = action, ts
+        if last_action is None:
+            state.remove()
+        else:
+            state.update((last_action, last_ts))
+
+    return keyed_state(
+        df, key_col, fold, "action string, ts_ms bigint, duration_ms bigint",
+        "last_action string, last_ts bigint",
+        cols=[key_col, f"{action_col} AS action", f"{ts_ms_col} AS ts_ms"])
 
 
 # --- X4: keyed debounce (the batch q_event_debounce as incremental state) ---
@@ -319,62 +248,25 @@ def session_durations(
 # operators/temporal.py::q_event_debounce (lag + gap compare); outputs
 # must agree exactly when the stream replays the same bounded input.
 
-DEBOUNCE_STATE = StructType([
-    StructField("types", ArrayType(StringType())),
-    StructField("last_ts", ArrayType(LongType())),
-])
-
-
-def make_debouncer(gap_ms: int):
-    """Per user_id: emit only events arriving more than gap_ms after the
-    previous raw event of the same (user, type); per-type last raw ts is
-    carried in parallel-array ValueState."""
-
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        rows = _sorted(pdfs)
-        last: dict[str, int] = (
-            dict(zip(state.get[0], state.get[1])) if state.exists else {}
-        )
-        out: list[tuple[Any, Any, int]] = []
-        for et, ts in zip(rows["event_type"], rows["ts_ms"]):
-            ts = int(ts)
-            prev = last.get(et)
-            if prev is None or ts - prev > gap_ms:
-                out.append((key[0], et, ts))
-            last[et] = ts
-        state.update((list(last.keys()), list(last.values())))
-        yield pd.DataFrame(out, columns=["user_id", "event_type", "ts_ms"])
-
-    return fn
-
-
 def debounced_events(df: DataFrame, gap_ms: int) -> DataFrame:
     """X4 streaming operator: df must contain (user_id, event_type,
     ts_ms [, event_id]). Output: the surviving (user_id, event_type,
     ts_ms) rows."""
-    cols = ["user_id", "event_type", "ts_ms"]
-    if "event_id" in df.columns:
-        cols.append("event_id")
-    sel = df.selectExpr(*cols)
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("ts_ms", LongType()),
-        ]
-    )
-    # group by user_id ONLY (event_type folds into the per-key state):
-    # Python stateful cost ~ batches x groups, so shuffle on the
-    # high-cardinality key and keep the tiny-cardinality one in state.
-    return sel.groupBy("user_id").applyInPandasWithState(
-        make_debouncer(gap_ms),
-        outputStructType=out_schema,
-        stateStructType=DEBOUNCE_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+
+    def fold(rows, state):
+        last = dict(zip(state.get[0], state.get[1])) if state.exists else {}
+        for et, ts in zip(rows["event_type"], rows["ts_ms"]):
+            ts = int(ts)
+            prev = last.get(et)
+            if prev is None or ts - prev > gap_ms:
+                yield et, ts
+            last[et] = ts
+        state.update((list(last.keys()), list(last.values())))
+
+    return keyed_state(
+        df, "user_id", fold, "event_type string, ts_ms bigint",
+        "types array<string>, last_ts array<bigint>",
+        cols=["user_id", "event_type", "ts_ms"])
 
 
 # --- X5: CEP "followed-by" pattern (A then B within T) ----------------------
@@ -383,15 +275,15 @@ def debounced_events(df: DataFrame, gap_ms: int) -> DataFrame:
 # consumes its events — "after match skip past last row"). The automaton
 # is one pending-timestamp per key: a view (re)arms it, a purchase either
 # fires a match (and always disarms) or just disarms — later purchases
-# can only be further from the stale view. Pure-python core shared by the
-# batch `applyInPandas` form and this incremental twin; the oracle
-# replays the same automaton as a recursive CTE.
+# can only be further from the stale view. ``cep_scan`` is the automaton
+# in pure Python: this operator folds it per micro-batch, and the tests
+# replay it over the whole bounded input as the reference answer. The
+# batch q_cep_followed_by collapses it into one lag() window pass, and
+# the oracle replays it as a recursive CTE.
 #
 # State is ONE long per key regardless of history length — the streaming
-# form is the scale path when per-entity history no longer fits the
-# batch group (applyInPandas buffers a whole key's rows in one worker).
-
-CEP_STATE = StructType([StructField("pending_ts", LongType())])
+# form is the scale path when per-entity history no longer fits one
+# batch group.
 
 _NO_PENDING = -1
 
@@ -414,45 +306,21 @@ def cep_scan(
     return out, pending
 
 
-def make_cep_followed_by(within_ms: int):
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        rows = _sorted(pdfs)
-        pending = state.get[0] if state.exists else _NO_PENDING
-        pairs, pending = cep_scan(
-            rows["ts_ms"], rows["event_type"], within_ms, pending
-        )
-        state.update((pending,))
-        yield pd.DataFrame(
-            [(key[0], v, p, p - v) for v, p in pairs],
-            columns=["user_id", "view_ts_ms", "purchase_ts_ms", "gap_ms"],
-        )
-
-    return fn
-
-
 def cep_followed_by(df: DataFrame, within_ms: int) -> DataFrame:
     """X5 streaming operator: df must contain (user_id, event_type,
     ts_ms [, event_id]) already filtered to the two pattern types."""
-    cols = ["user_id", "event_type", "ts_ms"]
-    if "event_id" in df.columns:
-        cols.append("event_id")
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("view_ts_ms", LongType()),
-            StructField("purchase_ts_ms", LongType()),
-            StructField("gap_ms", LongType()),
-        ]
-    )
-    return df.selectExpr(*cols).groupBy("user_id").applyInPandasWithState(
-        make_cep_followed_by(within_ms),
-        outputStructType=out_schema,
-        stateStructType=CEP_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+
+    def fold(rows, state):
+        pending = state.get[0] if state.exists else _NO_PENDING
+        pairs, pending = cep_scan(
+            rows["ts_ms"], rows["event_type"], within_ms, pending)
+        state.update((pending,))
+        return [(v, p, p - v) for v, p in pairs]
+
+    return keyed_state(
+        df, "user_id", fold,
+        "view_ts_ms bigint, purchase_ts_ms bigint, gap_ms bigint",
+        "pending_ts bigint", cols=["user_id", "event_type", "ts_ms"])
 
 
 # --- W8: per-key COUNT windows (countWindow(N) incremental form) ------------
@@ -462,26 +330,13 @@ def cep_followed_by(df: DataFrame, within_ms: int) -> DataFrame:
 # semantics), so bounded replays match the batch analog's full-windows-
 # only output.
 
-COUNT_WINDOW_STATE = StructType(
-    [
-        StructField("win_idx", LongType()),
-        StructField("cnt", LongType()),
-        StructField("sum_cents", LongType()),
-        StructField("min_ts", LongType()),
-        StructField("max_ts", LongType()),
-    ]
-)
+def count_windows(df: DataFrame, n: int) -> DataFrame:
+    """W8 streaming operator: df must contain (user_id, ts_ms, cents
+    [, event_id])."""
 
-
-def make_count_windower(n: int):
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        rows = _sorted(pdfs)
+    def fold(rows, state):
         win_idx, cnt, s, lo, hi = (
-            state.get if state.exists else (0, 0, 0, None, None)
-        )
-        out = []
+            state.get if state.exists else (0, 0, 0, None, None))
         for ts, cents in zip(rows["ts_ms"], rows["cents"]):
             ts, cents = int(ts), int(cents)
             cnt += 1
@@ -489,41 +344,17 @@ def make_count_windower(n: int):
             lo = ts if lo is None or ts < lo else lo
             hi = ts if hi is None or ts > hi else hi
             if cnt == n:
-                out.append((key[0], win_idx, cnt, lo, hi, s))
+                yield win_idx, cnt, lo, hi, s
                 win_idx, cnt, s, lo, hi = win_idx + 1, 0, 0, None, None
         state.update((win_idx, cnt, s, lo, hi))
-        yield pd.DataFrame(
-            out,
-            columns=["user_id", "win_idx", "n_events", "start_ts_ms",
-                     "end_ts_ms", "sum_cents"],
-        )
 
-    return fn
-
-
-def count_windows(df: DataFrame, n: int) -> DataFrame:
-    """W8 streaming operator: df must contain (user_id, ts_ms, cents
-    [, event_id])."""
-    cols = ["user_id", "ts_ms", "cents"]
-    if "event_id" in df.columns:
-        cols.append("event_id")
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("win_idx", LongType()),
-            StructField("n_events", LongType()),
-            StructField("start_ts_ms", LongType()),
-            StructField("end_ts_ms", LongType()),
-            StructField("sum_cents", LongType()),
-        ]
-    )
-    return df.selectExpr(*cols).groupBy("user_id").applyInPandasWithState(
-        make_count_windower(n),
-        outputStructType=out_schema,
-        stateStructType=COUNT_WINDOW_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(
+        df, "user_id", fold,
+        "win_idx bigint, n_events bigint, start_ts_ms bigint, "
+        "end_ts_ms bigint, sum_cents bigint",
+        "win_idx bigint, cnt bigint, sum_cents bigint, min_ts bigint, "
+        "max_ts bigint",
+        cols=["user_id", "ts_ms", "cents"])
 
 
 # --- X6: control-stream rule state (broadcast-state family) ------------------
@@ -533,54 +364,27 @@ def count_windows(df: DataFrame, n: int) -> DataFrame:
 # key regardless of history — rules crossing micro-batch boundaries bind
 # later data rows, which is the whole point of the pattern.
 
-RULES_STATE = StructType([StructField("thr", LongType())])
+def rule_filtered_events(df: DataFrame, default_cents: int) -> DataFrame:
+    """X6 streaming operator: df must contain (event_type, ts_ms, event_id,
+    cents, is_rule). Output: the alerting data rows with the threshold
+    that admitted them."""
 
-
-def make_rule_filter(default_cents: int):
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        rows = _sorted(pdfs)
+    def fold(rows, state):
         thr = int(state.get[0]) if state.exists else default_cents
-        out: list[tuple[Any, int, int, int, int]] = []
         for ts, eid, cents, is_rule in zip(
             rows["ts_ms"], rows["event_id"], rows["cents"], rows["is_rule"]
         ):
             if bool(is_rule):
                 thr = int(cents)
             elif int(cents) >= thr:
-                out.append((key[0], int(ts), int(eid), int(cents), thr))
+                yield int(ts), int(eid), int(cents), thr
         state.update((thr,))
-        yield pd.DataFrame(
-            out,
-            columns=["event_type", "ts_ms", "event_id", "cents",
-                     "threshold_cents"],
-        )
 
-    return fn
-
-
-def rule_filtered_events(df: DataFrame, default_cents: int) -> DataFrame:
-    """X6 streaming operator: df must contain (event_type, ts_ms, event_id,
-    cents, is_rule). Output: the alerting data rows with the threshold
-    that admitted them."""
-    sel = df.selectExpr("event_type", "ts_ms", "event_id", "cents", "is_rule")
-    out_schema = StructType(
-        [
-            StructField("event_type", StringType()),
-            StructField("ts_ms", LongType()),
-            StructField("event_id", LongType()),
-            StructField("cents", LongType()),
-            StructField("threshold_cents", LongType()),
-        ]
-    )
-    return sel.groupBy("event_type").applyInPandasWithState(
-        make_rule_filter(default_cents),
-        outputStructType=out_schema,
-        stateStructType=RULES_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(
+        df, "event_type", fold,
+        "ts_ms bigint, event_id bigint, cents bigint, threshold_cents bigint",
+        "thr bigint",
+        cols=["event_type", "ts_ms", "event_id", "cents", "is_rule"])
 
 
 # --- X7: running z-score anomaly alerts (Welford state, exact integers) -----
@@ -595,57 +399,26 @@ def rule_filtered_events(df: DataFrame, default_cents: int) -> DataFrame:
 # of squares stays under 2^63 through ~10^9 observations of value <=
 # $21M in cents — document-scale telemetry never gets close).
 
-WELFORD_STATE = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("s", LongType()),
-        StructField("q", LongType()),
-    ]
-)
-
-
-def make_zscore_alert(min_n: int, z2: int, key_name: str):
-    """Per key: emit (key, ts_ms, cents, n_prior) for each observation
-    outside z sigma of the PRIOR history (>= min_n priors required),
-    then fold the observation into the running moments."""
-
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        rows = _sorted(pdfs)
-        n, s, q = state.get if state.exists else (0, 0, 0)
-        out: list[tuple[Any, int, int, int]] = []
-        for ts, x in zip(rows["ts_ms"], rows["cents"]):
-            ts, x = int(ts), int(x)
-            if n >= min_n and (n * x - s) ** 2 > z2 * (n * q - s * s):
-                out.append((key[0], ts, x, n))
-            n, s, q = n + 1, s + x, q + x * x
-        state.update((n, s, q))
-        yield pd.DataFrame(out, columns=[key_name, "ts_ms", "cents", "n_prior"])
-
-    return fn
-
-
 def zscore_alerts(
     df: DataFrame, min_n: int, z2: int, key_col: str = "user_id"
 ) -> DataFrame:
-    """X7 streaming operator: df must contain (key_col, ts_ms, cents[,
+    """X7 streaming operator: per key, emit each observation outside z
+    sigma of the PRIOR history (>= min_n priors required), then fold it
+    into the running moments. df must contain (key_col, ts_ms, cents[,
     event_id]). Output: (key_col, ts_ms, cents, n_prior)."""
-    out_schema = StructType(
-        [
-            StructField(key_col, LongType()),
-            StructField("ts_ms", LongType()),
-            StructField("cents", LongType()),
-            StructField("n_prior", LongType()),
-        ]
-    )
-    return df.groupBy(key_col).applyInPandasWithState(
-        make_zscore_alert(min_n, z2, key_col),
-        outputStructType=out_schema,
-        stateStructType=WELFORD_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+
+    def fold(rows, state):
+        n, s, q = state.get if state.exists else (0, 0, 0)
+        for ts, x in zip(rows["ts_ms"], rows["cents"]):
+            ts, x = int(ts), int(x)
+            if n >= min_n and (n * x - s) ** 2 > z2 * (n * q - s * s):
+                yield ts, x, n
+            n, s, q = n + 1, s + x, q + x * x
+        state.update((n, s, q))
+
+    return keyed_state(
+        df, key_col, fold, "ts_ms bigint, cents bigint, n_prior bigint",
+        "n bigint, s bigint, q bigint")
 
 
 # --- X10: online Holt level+trend smoothing in keyed state -------------------
@@ -656,16 +429,6 @@ def zscore_alerts(
 # integer recurrence and emits the CURRENT smoothed state per user with
 # the still-open day provisionally folded (so a bounded replay's final
 # emit equals the batch operator row for row — the oracle is shared).
-
-HOLT_STATE = StructType(
-    [
-        StructField("last_day", LongType()),
-        StructField("day_cents", LongType()),
-        StructField("lvl", LongType()),
-        StructField("trend", LongType()),
-        StructField("n_days", LongType()),
-    ]
-)
 
 _HOLT_SCALE = 1_000_000
 
@@ -685,11 +448,11 @@ def _holt_fold(lvl, trend, n_days, cents):
     return lvl, trend, n_days + 1
 
 
-def make_holt_smoother(key_name: str):
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        rows = _sorted(pdfs)
+def holt_smoother(df: DataFrame, key_col: str = "user_id") -> DataFrame:
+    """X10 streaming operator: df must contain (key_col, ts_ms, cents).
+    Output: (key_col, n_days, level_micro, trend_micro, forecast_micro)."""
+
+    def fold(rows, state):
         last_day, day_cents, lvl, trend, n_days = (
             state.get if state.exists else (None, 0, 0, 0, 0))
         for ts, c in zip(rows["ts_ms"], rows["cents"]):
@@ -704,33 +467,14 @@ def make_holt_smoother(key_name: str):
         # provisional fold of the still-open day for the emit
         if last_day is not None:
             e_lvl, e_trend, e_n = _holt_fold(lvl, trend, n_days, day_cents)
-            yield pd.DataFrame(
-                [(key[0], e_n, e_lvl, e_trend, e_lvl + e_trend)],
-                columns=[key_name, "n_days", "level_micro", "trend_micro",
-                         "forecast_micro"])
+            yield e_n, e_lvl, e_trend, e_lvl + e_trend
 
-    return fn
-
-
-def holt_smoother(df: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """X10 streaming operator: df must contain (key_col, ts_ms, cents).
-    Output: (key_col, n_days, level_micro, trend_micro, forecast_micro)."""
-    out_schema = StructType(
-        [
-            StructField(key_col, LongType()),
-            StructField("n_days", LongType()),
-            StructField("level_micro", LongType()),
-            StructField("trend_micro", LongType()),
-            StructField("forecast_micro", LongType()),
-        ]
-    )
-    return df.groupBy(key_col).applyInPandasWithState(
-        make_holt_smoother(key_col),
-        outputStructType=out_schema,
-        stateStructType=HOLT_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(
+        df, key_col, fold,
+        "n_days bigint, level_micro bigint, trend_micro bigint, "
+        "forecast_micro bigint",
+        "last_day bigint, day_cents bigint, lvl bigint, trend bigint, "
+        "n_days bigint")
 
 
 # --- X11: online CUSUM drift alarms -----------------------------------------
@@ -741,30 +485,19 @@ def holt_smoother(df: DataFrame, key_col: str = "user_id") -> DataFrame:
 # post-alarm reset). All-integer arithmetic, so the streaming state and
 # the oracle's list-fold replay agree bit-for-bit. Pairs with the batch
 # q_cusum_changepoint (global daily series); this is the per-key online
-# form a monitoring pipeline runs.
+# form a monitoring pipeline runs. State: mu0 is -1 until the warmup
+# completes, first_alarm 0 until the first alarm.
 
 CUSUM_WARMUP = 10
 CUSUM_SLACK = 3_000   # cents
 CUSUM_H = 30_000      # cents
 
-CUSUM_STATE = StructType(
-    [
-        StructField("n_seen", LongType()),
-        StructField("warm_sum", LongType()),
-        StructField("mu0", LongType()),        # -1 until warmup completes
-        StructField("s_pos", LongType()),
-        StructField("s_neg", LongType()),
-        StructField("n_alarms", LongType()),
-        StructField("first_alarm", LongType()),  # 0 = none yet
-    ]
-)
 
+def cusum_detector(df: DataFrame, key_col: str = "user_id") -> DataFrame:
+    """X11 streaming operator: df must contain (key_col, ts_ms, event_id,
+    cents). Output: final CUSUM state per key."""
 
-def make_cusum_detector(key_name: str):
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        rows = _sorted(pdfs)
+    def fold(rows, state):
         n_seen, warm_sum, mu0, s_pos, s_neg, n_alarms, first_alarm = (
             state.get if state.exists else (0, 0, -1, 0, 0, 0, 0))
         for c in rows["cents"]:
@@ -787,35 +520,14 @@ def make_cusum_detector(key_name: str):
         state.update((n_seen, warm_sum, mu0, s_pos, s_neg, n_alarms,
                       first_alarm))
         if n_seen >= CUSUM_WARMUP:
-            yield pd.DataFrame(
-                [(key[0], n_seen, mu0, n_alarms, first_alarm, s_pos, s_neg)],
-                columns=[key_name, "n_events", "mu0_cents", "n_alarms",
-                         "first_alarm_idx", "s_pos", "s_neg"])
+            yield n_seen, mu0, n_alarms, first_alarm, s_pos, s_neg
 
-    return fn
-
-
-def cusum_detector(df: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """X11 streaming operator: df must contain (key_col, ts_ms, event_id,
-    cents). Output: final CUSUM state per key."""
-    out_schema = StructType(
-        [
-            StructField(key_col, LongType()),
-            StructField("n_events", LongType()),
-            StructField("mu0_cents", LongType()),
-            StructField("n_alarms", LongType()),
-            StructField("first_alarm_idx", LongType()),
-            StructField("s_pos", LongType()),
-            StructField("s_neg", LongType()),
-        ]
-    )
-    return df.groupBy(key_col).applyInPandasWithState(
-        make_cusum_detector(key_col),
-        outputStructType=out_schema,
-        stateStructType=CUSUM_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(
+        df, key_col, fold,
+        "n_events bigint, mu0_cents bigint, n_alarms bigint, "
+        "first_alarm_idx bigint, s_pos bigint, s_neg bigint",
+        "n_seen bigint, warm_sum bigint, mu0 bigint, s_pos bigint, "
+        "s_neg bigint, n_alarms bigint, first_alarm bigint")
 
 
 # --- X12: token-bucket rate limiter -----------------------------------------
@@ -830,22 +542,11 @@ def cusum_detector(df: DataFrame, key_col: str = "user_id") -> DataFrame:
 TB_CAP_MILLI = 3_000
 TB_REFILL_MS = 6 * 3_600_000  # 1 token per 6 h
 
-TB_STATE = StructType(
-    [
-        StructField("tokens", LongType()),
-        StructField("last_ms", LongType()),
-        StructField("n_events", LongType()),
-        StructField("n_accepted", LongType()),
-        StructField("n_dropped", LongType()),
-    ]
-)
 
+def token_bucket(df: DataFrame, key_col: str = "user_id") -> DataFrame:
+    """X12 streaming operator: df must contain (key_col, ts_ms, event_id)."""
 
-def make_token_bucket(key_name: str):
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        rows = _sorted(pdfs)
+    def fold(rows, state):
         tokens, last_ms, n_events, n_acc, n_drop = (
             state.get if state.exists else (TB_CAP_MILLI, -1, 0, 0, 0))
         for ts in rows["ts_ms"]:
@@ -862,29 +563,11 @@ def make_token_bucket(key_name: str):
             else:
                 n_drop += 1
         state.update((tokens, last_ms, n_events, n_acc, n_drop))
-        yield pd.DataFrame(
-            [(key[0], n_events, n_acc, n_drop, tokens)],
-            columns=[key_name, "n_events", "n_accepted", "n_dropped",
-                     "tokens_milli"])
+        yield n_events, n_acc, n_drop, tokens
 
-    return fn
-
-
-def token_bucket(df: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """X12 streaming operator: df must contain (key_col, ts_ms, event_id)."""
-    out_schema = StructType(
-        [
-            StructField(key_col, LongType()),
-            StructField("n_events", LongType()),
-            StructField("n_accepted", LongType()),
-            StructField("n_dropped", LongType()),
-            StructField("tokens_milli", LongType()),
-        ]
-    )
-    return df.groupBy(key_col).applyInPandasWithState(
-        make_token_bucket(key_col),
-        outputStructType=out_schema,
-        stateStructType=TB_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(
+        df, key_col, fold,
+        "n_events bigint, n_accepted bigint, n_dropped bigint, "
+        "tokens_milli bigint",
+        "tokens bigint, last_ms bigint, n_events bigint, n_accepted bigint, "
+        "n_dropped bigint")

@@ -1733,3 +1733,139 @@ def test_failed_drain_reraises_and_leaves_no_checkpoint(spark, drain_source):
         run_available_now(boom, spark, mode="append")
     assert not os.listdir(base)
     assert not spark.streams.active
+
+
+def test_failed_memory_drain_drops_its_view(spark, drain_source):
+    """The memory sink's view is registered when its query starts, so a
+    drain that fails must drop it too, or every failed replay leaves a
+    table in the session catalog."""
+    from pyspark.errors import StreamingQueryException
+
+    src, _ = drain_source
+    before = {t.name for t in spark.catalog.listTables()}
+    stream = spark.readStream.schema("x long").csv(src)
+    boom = stream.select(
+        F.when(F.col("x") > 1, F.raise_error(F.lit("view leak probe")))
+        .otherwise(F.col("x")).alias("x"))
+    with pytest.raises(StreamingQueryException, match="view leak probe"):
+        run_available_now(boom, spark, mode="append")
+    assert {t.name for t in spark.catalog.listTables()} == before
+
+
+# --- the keyed-state contract ------------------------------------------------
+
+def _st(**fields) -> T.StructType:
+    return T.StructType([T.StructField(n, t) for n, t in fields.items()])
+
+
+_L, _S = T.LongType(), T.StringType()
+
+# Each operator's applyInPandasWithState arguments, as its own StructTypes
+# declared them before the operators shared ``keyed_state``: (output
+# schema for a bigint user_id / string event_type key, state schema,
+# output mode, timeout). A state schema is checkpoint format: a change
+# makes existing checkpoints unreadable.
+STATE_CONTRACT = {
+    "interval_alerts": (
+        _st(user_id=_L, ts_ms=_L, diff_ms=_L), _st(last_ts=_L),
+        "update", "NoTimeout"),
+    "idle_alerts": (
+        _st(user_id=_L, last_ts_ms=_L, n_events=_L),
+        _st(last_ts=_L, n_events=_L), "update", "EventTimeTimeout"),
+    "buffered_flush": (
+        _st(user_id=_L, n_events=_L), _st(n_events=_L),
+        "append", "ProcessingTimeTimeout"),
+    "session_durations": (
+        _st(user_id=_L, action=_S, ts_ms=_L, duration_ms=_L),
+        _st(last_action=_S, last_ts=_L), "update", "NoTimeout"),
+    "debounced_events": (
+        _st(user_id=_L, event_type=_S, ts_ms=_L),
+        _st(types=T.ArrayType(_S), last_ts=T.ArrayType(_L)),
+        "update", "NoTimeout"),
+    "cep_followed_by": (
+        _st(user_id=_L, view_ts_ms=_L, purchase_ts_ms=_L, gap_ms=_L),
+        _st(pending_ts=_L), "update", "NoTimeout"),
+    "count_windows": (
+        _st(user_id=_L, win_idx=_L, n_events=_L, start_ts_ms=_L,
+            end_ts_ms=_L, sum_cents=_L),
+        _st(win_idx=_L, cnt=_L, sum_cents=_L, min_ts=_L, max_ts=_L),
+        "update", "NoTimeout"),
+    "rule_filtered_events": (
+        _st(event_type=_S, ts_ms=_L, event_id=_L, cents=_L,
+            threshold_cents=_L),
+        _st(thr=_L), "update", "NoTimeout"),
+    "zscore_alerts": (
+        _st(user_id=_L, ts_ms=_L, cents=_L, n_prior=_L),
+        _st(n=_L, s=_L, q=_L), "update", "NoTimeout"),
+    "holt_smoother": (
+        _st(user_id=_L, n_days=_L, level_micro=_L, trend_micro=_L,
+            forecast_micro=_L),
+        _st(last_day=_L, day_cents=_L, lvl=_L, trend=_L, n_days=_L),
+        "update", "NoTimeout"),
+    "cusum_detector": (
+        _st(user_id=_L, n_events=_L, mu0_cents=_L, n_alarms=_L,
+            first_alarm_idx=_L, s_pos=_L, s_neg=_L),
+        _st(n_seen=_L, warm_sum=_L, mu0=_L, s_pos=_L, s_neg=_L,
+            n_alarms=_L, first_alarm=_L),
+        "update", "NoTimeout"),
+    "token_bucket": (
+        _st(user_id=_L, n_events=_L, n_accepted=_L, n_dropped=_L,
+            tokens_milli=_L),
+        _st(tokens=_L, last_ms=_L, n_events=_L, n_accepted=_L,
+            n_dropped=_L),
+        "update", "NoTimeout"),
+}
+
+
+def test_keyed_state_operators_keep_their_state_contract(spark, monkeypatch):
+    from pyspark.sql.group import GroupedData
+
+    from apache_flink_datastream_api_spark.streaming import state
+
+    def as_struct(schema):
+        return T.DataType.fromDDL(schema) if isinstance(schema, str) else schema
+
+    calls = []
+
+    def record(self, func, outputStructType, stateStructType, outputMode,
+               timeoutConf):
+        calls.append((as_struct(outputStructType), as_struct(stateStructType),
+                      outputMode, timeoutConf))
+
+    monkeypatch.setattr(GroupedData, "applyInPandasWithState", record)
+    df = spark.createDataFrame(
+        [], "user_id bigint, event_type string, action string, ts_ms bigint, "
+        "event_ts timestamp, event_id bigint, cents bigint, is_rule boolean")
+    args = {
+        "interval_alerts": (1_000,), "idle_alerts": (1_000,),
+        "buffered_flush": (1_000,), "session_durations": ("purchase",),
+        "debounced_events": (1_000,), "cep_followed_by": (1_000,),
+        "count_windows": (10,), "rule_filtered_events": (100,),
+        "zscore_alerts": (5, 9), "holt_smoother": (), "cusum_detector": (),
+        "token_bucket": (),
+    }
+    got = {}
+    for name, extra in args.items():
+        getattr(state, name)(df, *extra)
+        got[name] = calls.pop()
+    assert got == STATE_CONTRACT
+
+
+def test_keyed_state_is_the_only_apply_in_pandas_with_state_call():
+    """Every per-key state machine runs through ``state.keyed_state``."""
+    import ast
+    import pathlib
+
+    import apache_flink_datastream_api_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    calls = {}
+    for path in sorted(root.rglob("*.py")):
+        n = sum(
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "applyInPandasWithState"
+            for node in ast.walk(ast.parse(path.read_text())))
+        if n:
+            calls[path.relative_to(root).as_posix()] = n
+    assert calls == {"streaming/state.py": 1}

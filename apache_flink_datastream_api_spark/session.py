@@ -43,6 +43,25 @@ example a driver's vanilla one; there it can be turned on at submit time:
     spark-submit --driver-class-path <package>/jvm/localfs.jar \
       --conf spark.hadoop.fs.file.impl=graft.fs.NioLocalFileSystem \
       --conf spark.hadoop.fs.AbstractFileSystem.file.impl=graft.fs.NioLocalFs ...
+
+Python workers: every Python-worker task (pandas and Arrow UDFs,
+``applyInPandasWithState``) calls ``importlib.invalidate_caches()``, and
+before CPython 3.13 that re-reads the whole directory of every zip archive a
+worker imports from: ``pyspark.zip`` 13 times, the ``spark-core`` jar twice
+and py4j once, 137-171 ms per task on a 4-core host. For the same
+``local[...]`` JVMs, ``get_spark`` therefore names ``pydaemon`` in
+``spark.python.daemon.module``. It is ``pyspark.daemon`` with zip import
+caches that are kept while their archive is unchanged, which brings the call
+under 1 ms. It also appends the directory that holds this package to
+``spark.executorEnv.PYTHONPATH``, so the daemon and the workers import the
+package from any working directory. A caller's daemon module is kept, and a
+caller's ``PYTHONPATH`` is kept with that directory appended. Other masters
+start workers on hosts where this checkout's path may not exist, so they keep
+``pyspark.daemon``. A vanilla session can opt in at submit time when the
+package is importable on its workers:
+
+    spark-submit --conf spark.python.daemon.module=apache_flink_datastream_api_spark.pydaemon \
+      --conf spark.executorEnv.PYTHONPATH=<directory holding the package> ...
 """
 
 from __future__ import annotations
@@ -55,8 +74,15 @@ from py4j.java_gateway import JavaClass
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
+from apache_flink_datastream_api_spark import pydaemon
+
 LOCALFS_JAR = Path(__file__).with_name("jvm") / "localfs.jar"
 _CLASSPATH = "spark.driver.extraClassPath"
+_DAEMON = "spark.python.daemon.module"
+_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+# The directory that holds this package, so that workers import it (and the
+# daemon) from any working directory.
+PACKAGE_PARENT = str(Path(__file__).resolve().parents[1])
 _LOCALFS_CONF = {
     "spark.hadoop.fs.file.impl": "graft.fs.NioLocalFileSystem",
     "spark.hadoop.fs.AbstractFileSystem.file.impl": "graft.fs.NioLocalFs",
@@ -66,8 +92,10 @@ _LOCALFS_CONF = {
 def _session_conf(master: str, extra_conf: dict[str, str]) -> dict[str, str]:
     """``extra_conf`` plus, for a ``local[...]`` master whose JVM can load
     ``LOCALFS_JAR`` (one this call launches, or one already running with it
-    on its class path), the confs that serve ``file:`` paths through the jar.
-    A caller's class path is kept and the jar appended to it."""
+    on its class path), the confs that serve ``file:`` paths through the jar
+    and run Python workers under ``pydaemon``. A caller's class path and
+    worker ``PYTHONPATH`` are kept, with the jar and ``PACKAGE_PARENT``
+    appended; a caller's daemon module is kept."""
     conf = dict(extra_conf)
     if not re.fullmatch(r"local(\[.*\])?", master):
         return conf
@@ -78,7 +106,8 @@ def _session_conf(master: str, extra_conf: dict[str, str]) -> dict[str, str]:
     if gateway is not None and not _loads_localfs(gateway.jvm):
         return conf
     conf[_CLASSPATH] = os.pathsep.join(filter(None, (conf.get(_CLASSPATH), str(LOCALFS_JAR))))
-    return {**_LOCALFS_CONF, **conf}
+    conf[_PYTHONPATH] = os.pathsep.join(filter(None, (conf.get(_PYTHONPATH), PACKAGE_PARENT)))
+    return {**_LOCALFS_CONF, _DAEMON: pydaemon.__name__, **conf}
 
 
 def _loads_localfs(jvm) -> bool:

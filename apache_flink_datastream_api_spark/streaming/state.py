@@ -4,7 +4,7 @@ operators built on the same pattern), all run by one helper,
 
 Flink's ``RichMapFunction`` + ``ValueState`` processes one record at a
 time; Spark's state API hands each key a *batch* of rows per micro-batch.
-``keyed_state`` therefore concatenates a key's batch, sorts it by
+``keyed_state`` therefore concatenates a key's batch, stably sorts it by
 ``(ts_ms[, event_id])`` and hands it to the operator's fold, which runs
 the same per-record logic over it — identical outputs when replayed,
 batched emission granularity (the documented semantic difference,
@@ -70,25 +70,40 @@ def keyed_state(
             cols = [*cols, "event_id"]
         df = df.selectExpr(*cols)
     out_schema = DataType.fromDDL(f"{key_col} {dict(df.dtypes)[key_col]}, {out}")
-    names = out_schema.names
+    sort_by = [c for c in ("ts_ms", "event_id") if c in df.columns]
+    return df.groupBy(key_col).applyInPandasWithState(
+        _per_key(fold, out_schema.names, sort_by),
+        outputStructType=out_schema,
+        stateStructType=state,
+        outputMode=mode,
+        timeoutConf=timeout,
+    )
+
+
+def _per_key(
+    fold: Callable[[pd.DataFrame | None, GroupState], Iterable[tuple]],
+    names: list[str],
+    sort_by: list[str],
+) -> Callable[[tuple[Any, ...], Iterator[pd.DataFrame], GroupState], Iterator[pd.DataFrame]]:
+    """The ``applyInPandasWithState`` function of ``keyed_state``: one
+    key's chunks as one frame stably sorted by ``sort_by`` (no concat for
+    one chunk, no sort for one row), folded; a key with no output yields
+    no frame rather than an empty one."""
 
     def run(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], st: GroupState
     ) -> Iterator[pd.DataFrame]:
         rows = None
         if not st.hasTimedOut:
-            rows = pd.concat(list(pdfs))
-            rows = rows.sort_values(
-                [c for c in ("ts_ms", "event_id") if c in rows.columns])
-        yield pd.DataFrame([(key[0], *r) for r in fold(rows, st)], columns=names)
+            chunks = list(pdfs)
+            rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
+            if len(rows) > 1 and sort_by:
+                rows = rows.sort_values(sort_by, kind="stable")
+        out = [(key[0], *r) for r in fold(rows, st)]
+        if out:
+            yield pd.DataFrame(out, columns=names)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        run,
-        outputStructType=out_schema,
-        stateStructType=state,
-        outputMode=mode,
-        timeoutConf=timeout,
-    )
+    return run
 
 
 # --- X1: interval alert (StatefulOperations.java:84-129 semantics) ---------

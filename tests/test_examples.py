@@ -4,8 +4,6 @@ streaming paths share the same transforms."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 from pyspark.sql import Window, functions as F
 
@@ -33,13 +31,13 @@ from apache_flink_datastream_api_spark.streaming.sinks import run_available_now
 
 
 @pytest.fixture(scope="module")
-def audit_dir():
-    return write_audit_fixture(tempfile.mkdtemp(prefix="audit_fx_"))
+def audit_dir(tmp_path_factory):
+    return write_audit_fixture(str(tmp_path_factory.mktemp("audit_fx")))
 
 
 @pytest.fixture(scope="module")
-def browser_dir():
-    return write_browser_fixture(tempfile.mkdtemp(prefix="browser_fx_"))
+def browser_dir(tmp_path_factory):
+    return write_browser_fixture(str(tmp_path_factory.mktemp("browser_fx")))
 
 
 @pytest.fixture(scope="module")

@@ -271,7 +271,8 @@ def test_session_conf_appends_the_jar_to_a_callers_class_path(spark):
 
 @pytest.mark.parametrize("master", ["spark://host:7077", "yarn", "local-cluster[2,1,1024]"])
 def test_session_conf_keeps_stock_hadoop_off_local(master):
-    extra = {"spark.driver.extraClassPath": "lib/extra.jar"}
+    extra = {"spark.driver.extraClassPath": "lib/extra.jar",
+             "spark.executorEnv.PYTHONPATH": "lib/extra"}
     assert session._session_conf(master, extra) == extra
 
 

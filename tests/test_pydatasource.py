@@ -47,7 +47,7 @@ def test_stream_equals_batch(spark):
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
-def test_stream_drains_over_multiple_microbatches(spark):
+def test_stream_drains_over_multiple_microbatches(spark, tmp_path):
     register(spark)
     stream = (
         spark.readStream.format("audit_trail_gen")
@@ -55,7 +55,6 @@ def test_stream_drains_over_multiple_microbatches(spark):
         .option("rowsPerBatch", 40)
         .load()
     )
-    import tempfile
     import uuid
 
     name = f"gen_test_{uuid.uuid4().hex[:8]}"
@@ -63,7 +62,7 @@ def test_stream_drains_over_multiple_microbatches(spark):
         stream.writeStream.outputMode("append")
         .format("memory")
         .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_gen_t_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(processingTime="0 seconds")
         .start()
     )

@@ -9,6 +9,7 @@ import os
 import shutil
 import tempfile
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F, types as T
 
@@ -24,12 +25,19 @@ from apache_flink_datastream_api_spark.streaming.watermarks import (
 from .conftest import SF_DIR
 
 
+def _fresh_dir(tmp_path, name: str) -> str:
+    """A new empty directory ``tmp_path/name``."""
+    d = tmp_path / name
+    d.mkdir()
+    return str(d)
+
+
 def _sorted_rows(df, cols):
     return [tuple(r) for r in df.select(*cols).orderBy(*cols).collect()]
 
 
 @pytest.fixture(scope="module")
-def chunked_events_dir(spark):
+def chunked_events_dir(spark, tmp_path_factory):
     """Events (subset) written as 3 time-ordered CSV chunks — replaying
     them with maxFilesPerTrigger=1 exercises state across micro-batches
     with no late arrivals."""
@@ -40,7 +48,7 @@ def chunked_events_dir(spark):
         .orderBy("ts_ms", "event_id")
         .collect()
     )
-    d = tempfile.mkdtemp(prefix="chunks_")
+    d = str(tmp_path_factory.mktemp("chunks"))
     n = len(e)
     for i in range(3):
         chunk = e[i * n // 3 : (i + 1) * n // 3]
@@ -197,7 +205,7 @@ def test_split_late_batch(spark):
     assert {r.event_id for r in on_time.collect()} == {1, 2, 4}
 
 
-def test_late_data_capture_streaming(spark, chunked_events_dir):
+def test_late_data_capture_streaming(spark, chunked_events_dir, tmp_path):
     """T3 semantics on a live stream: with delay=0 every row older than the
     running max is captured as late; totals must add up."""
     captured = {"late": 0, "on_time": 0}
@@ -217,7 +225,7 @@ def test_late_data_capture_streaming(spark, chunked_events_dir):
     )
     q = (
         stream.writeStream.foreachBatch(cap)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
+        .option("checkpointLocation", _fresh_dir(tmp_path, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -228,7 +236,7 @@ def test_late_data_capture_streaming(spark, chunked_events_dir):
     assert captured["late"] == 0
 
 
-def test_idempotent_sink_skips_replayed_batches(spark, chunked_events_dir):
+def test_idempotent_sink_skips_replayed_batches(spark, chunked_events_dir, tmp_path):
     """K2 remedy: re-delivered micro-batches (same batch_id) must not
     double-write. Simulate the at-least-once retry by invoking the sink
     again with the same ids after the run."""
@@ -239,12 +247,12 @@ def test_idempotent_sink_skips_replayed_batches(spark, chunked_events_dir):
     delivered: list[tuple[int, int]] = []  # (batch_id, row_count)
     sink = IdempotentBatchSink(
         lambda df, bid: delivered.append((bid, df.count())),
-        tempfile.mkdtemp(prefix="commits_"),
+        _fresh_dir(tmp_path, "commits"),
     )
     q = (
         _chunk_stream(spark, chunked_events_dir)
         .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
+        .option("checkpointLocation", _fresh_dir(tmp_path, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -281,14 +289,14 @@ def test_drop_duplicates_within_watermark(spark, chunked_events_dir):
     assert got == want
 
 
-def test_csv_file_sink_roundtrip(spark, chunked_events_dir):
+def test_csv_file_sink_roundtrip(spark, chunked_events_dir, tmp_path):
     """K1: streaming file sink writes exactly the input rows."""
-    out = tempfile.mkdtemp(prefix="sink_")
+    out = _fresh_dir(tmp_path, "sink")
     stream = _chunk_stream(spark, chunked_events_dir)
     q = to_csv_files(
         stream.selectExpr("event_id", "user_id"),
         out,
-        tempfile.mkdtemp(prefix="ckpt_"),
+        _fresh_dir(tmp_path, "ckpt"),
         available_now=True,
     )
     q.awaitTermination(300)
@@ -431,15 +439,13 @@ def test_join_then_window_batching_invariant(spark, chunked_events_dir):
     assert len(one) > 0
 
 
-def test_state_restored_across_query_restart(spark):
+def test_state_restored_across_query_restart(spark, tmp_path):
     """Stop/restart durability: a second run over the SAME checkpoint must
     (a) not reprocess the first run's files and (b) restore keyed state —
     proven by an alert whose two deletes straddle the restart, which can
     only fire from restored last-delete state."""
-    import shutil
-
-    src = tempfile.mkdtemp(prefix="restart_src_")
-    ckpt = tempfile.mkdtemp(prefix="restart_ckpt_")
+    src = _fresh_dir(tmp_path, "restart_src")
+    ckpt = _fresh_dir(tmp_path, "restart_ckpt")
     t0 = 1_700_000_000_000
     with open(os.path.join(src, "f0.csv"), "w") as fh:
         fh.write(f"1,7,error,{t0}\n")
@@ -477,19 +483,15 @@ def test_state_restored_across_query_restart(spark):
     # 7000 spans the restart: requires last_ts from the restored state.
     # f0's alert must NOT reappear (its batch is committed in the log).
     assert second == {(7, 7000), (7, 3000)}
-    shutil.rmtree(src)
-    shutil.rmtree(ckpt)
 
 
-def test_streaming_upsert_snapshot_sink(spark):
+def test_streaming_upsert_snapshot_sink(spark, tmp_path):
     """Incremental view maintenance: a streaming per-user aggregate
     foreachBatch-merged into a parquet snapshot (last-writer-wins on the
     key) must converge to the batch answer — the streaming upsert sink
     every serving layer needs when no table format is available."""
-    import shutil
-
-    src = tempfile.mkdtemp(prefix="upsert_src_")
-    snap = os.path.join(tempfile.mkdtemp(prefix="upsert_snap_"), "totals")
+    src = _fresh_dir(tmp_path, "upsert_src")
+    snap = os.path.join(_fresh_dir(tmp_path, "upsert_snap"), "totals")
     rows = [(i, f"u{i % 3}", 10 * (i + 1)) for i in range(30)]
     for chunk in range(3):
         with open(os.path.join(src, f"f{chunk}.csv"), "w") as fh:
@@ -525,7 +527,7 @@ def test_streaming_upsert_snapshot_sink(spark):
     )
     q = (
         stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="upsert_ckpt_"))
+        .option("checkpointLocation", _fresh_dir(tmp_path, "upsert_ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -537,7 +539,6 @@ def test_streaming_upsert_snapshot_sink(spark):
         for u in {"u0", "u1", "u2"}
     }
     assert got == want
-    shutil.rmtree(src)
 
 
 def test_x4_debounce_state_survives_micro_batches(spark, chunked_events_dir):
@@ -644,18 +645,17 @@ def test_w8_count_window_state_survives_micro_batches(spark, chunked_events_dir)
     assert got.count() > 0, "fixture filled no count windows"
 
 
-def test_checkpoint_resume_processes_only_new_files(spark):
+def test_checkpoint_resume_processes_only_new_files(spark, tmp_path):
     """Incremental recovery: a stopped availableNow query re-started on
     the SAME checkpoint must process only files that arrived since —
     carrying keyed state across the restart (an alert whose two events
     straddle the stop/resume boundary still fires exactly once)."""
     import os as _os
-    import tempfile as _tf
 
     from apache_flink_datastream_api_spark.streaming.state import interval_alerts
 
-    src = _tf.mkdtemp(prefix="resume_src_")
-    ckpt = _tf.mkdtemp(prefix="resume_ckpt_", dir="/dev/shm")
+    src = _fresh_dir(tmp_path, "resume_src")
+    ckpt = _fresh_dir(tmp_path, "resume_ckpt")
     rows1 = [(1, 100, "error", 1_000_000)]
     rows2 = [(2, 100, "error", 1_004_000),   # within 10s of event 1 -> alert
              (3, 200, "error", 9_000_000)]
@@ -663,7 +663,7 @@ def test_checkpoint_resume_processes_only_new_files(spark):
         for r in rows1:
             f.write(",".join(map(str, r)) + "\n")
 
-    out_dir = _tf.mkdtemp(prefix="resume_out_")
+    out_dir = _fresh_dir(tmp_path, "resume_out")
 
     def run_once():
         stream = (
@@ -699,7 +699,7 @@ def test_checkpoint_resume_processes_only_new_files(spark):
     assert second == [(100, 1_004_000, 4_000)], second
 
 
-def test_t2_stalled_watermark_divergence(spark):
+def test_t2_stalled_watermark_divergence(spark, tmp_path):
     """Pin the ONE place Spark's watermark semantics observably diverge from
     the reference's punctuated assigner (chapter4/EventTimeOperations.java:
     98-120): the reference emits watermark = WALL CLOCK - 2 s refreshed every
@@ -714,8 +714,8 @@ def test_t2_stalled_watermark_divergence(spark):
     3. run 3 (row at t=25 s): watermark jumps to 23 s, window [0,10 s)
        finalizes and emits WITH the late row counted.
     """
-    d = tempfile.mkdtemp(prefix="t2src_")
-    ckpt = tempfile.mkdtemp(prefix="t2ckpt_")
+    d = _fresh_dir(tmp_path, "t2src")
+    ckpt = _fresh_dir(tmp_path, "t2ckpt")
     emitted: list[tuple[int, int]] = []
 
     def write_chunk(i, rows):
@@ -767,7 +767,7 @@ KAFKA_BOOTSTRAP = os.environ.get("KAFKA_BOOTSTRAP")
     not KAFKA_BOOTSTRAP,
     reason="S2/K2 need a broker: set KAFKA_BOOTSTRAP=host:port to run",
 )
-def test_kafka_roundtrip_s2_k2(spark, chunked_events_dir):
+def test_kafka_roundtrip_s2_k2(spark, chunked_events_dir, tmp_path):
     """S2 + K2 end-to-end where a broker exists (none in this sandbox):
     stream the chunked events INTO a topic via to_kafka, read them back with
     kafka_lines, and compare payload sets."""
@@ -782,7 +782,7 @@ def test_kafka_roundtrip_s2_k2(spark, chunked_events_dir):
         "concat_ws(',', event_id, user_id, event_type, ts_ms) AS value",
     )
     wq = to_kafka(
-        payload, topic, KAFKA_BOOTSTRAP, tempfile.mkdtemp(prefix="kckpt_"),
+        payload, topic, KAFKA_BOOTSTRAP, _fresh_dir(tmp_path, "kckpt"),
         available_now=True,
     )
     assert wq.awaitTermination(300), "kafka writer did not finish in 300s"
@@ -854,7 +854,7 @@ def test_x6_rule_state_survives_micro_batches(spark, chunked_events_dir):
     assert 0 < n_alerts < n_data
 
 
-def test_lambda_backfill_plus_stream_tail_equals_batch(spark, chunked_events_dir):
+def test_lambda_backfill_plus_stream_tail_equals_batch(spark, chunked_events_dir, tmp_path):
     """The lambda-architecture seam: a batch BACKFILL over history plus a
     streaming TAIL whose window overlaps the backfill boundary (the
     standard at-least-once handoff) must reconcile to exactly the batch
@@ -865,7 +865,7 @@ def test_lambda_backfill_plus_stream_tail_equals_batch(spark, chunked_events_dir
         f for f in os.listdir(chunked_events_dir) if f.endswith(".csv")
     )
     assert len(files) == 3
-    tail_dir = tempfile.mkdtemp(prefix="lambda_tail_")
+    tail_dir = _fresh_dir(tmp_path, "lambda_tail")
     for i, f in enumerate(files[1:]):  # chunks 1+2: overlaps history's chunk 1
         dst = os.path.join(tail_dir, f)
         shutil.copy(os.path.join(chunked_events_dir, f), dst)
@@ -884,7 +884,7 @@ def test_lambda_backfill_plus_stream_tail_equals_batch(spark, chunked_events_dir
                 for r in df.collect()
             )
         )
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="lckpt_"))
+        .option("checkpointLocation", _fresh_dir(tmp_path, "lckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -901,7 +901,7 @@ def test_lambda_backfill_plus_stream_tail_equals_batch(spark, chunked_events_dir
     assert _sorted_rows(merged, cols) == _sorted_rows(full, cols)
 
 
-def test_stream_stream_join_state_is_watermark_bounded(spark, chunked_events_dir):
+def test_stream_stream_join_state_is_watermark_bounded(spark, chunked_events_dir, tmp_path):
     """The 100 TB claim behind every watermarked stream-stream join --
      'state on both sides is bounded by the watermark' -- asserted against
     the actual state store instead of narrated: after a 3-batch replay,
@@ -929,7 +929,7 @@ def test_stream_stream_join_state_is_watermark_bounded(spark, chunked_events_dir
         & (F.col("p_ts") >= F.col("v_ts"))
         & (F.col("p_ts") < F.col("v_ts") + F.expr("INTERVAL 10 MINUTES")),
     )
-    ckpt = tempfile.mkdtemp(prefix="ssjb_")
+    ckpt = _fresh_dir(tmp_path, "ssjb")
     q = (
         joined.writeStream.format("noop")
         .option("checkpointLocation", ckpt)
@@ -964,7 +964,7 @@ def test_stream_stream_join_state_is_watermark_bounded(spark, chunked_events_dir
     assert any(t >= chunk2_start for t in retained)
 
 
-def test_x1_value_state_readback_matches_batch(spark, chunked_events_dir):
+def test_x1_value_state_readback_matches_batch(spark, chunked_events_dir, tmp_path):
     """State-Processor-API parity for the CUSTOM stateful operator (the
     statestore_read_agg query covers the built-in aggregation): after
     draining x1 interval alerts, each key's ValueState read back through
@@ -973,7 +973,7 @@ def test_x1_value_state_readback_matches_batch(spark, chunked_events_dir):
     from apache_flink_datastream_api_spark.streaming.state import interval_alerts
 
     stream = _chunk_stream(spark, chunked_events_dir)
-    ckpt = tempfile.mkdtemp(prefix="x1rb_")
+    ckpt = _fresh_dir(tmp_path, "x1rb")
     q = (
         interval_alerts(stream, 5000)
         .writeStream.format("noop").outputMode("update")
@@ -1054,7 +1054,7 @@ def test_x8_neardup_kept_set_equals_batch_lsh_selection(spark):
     assert kept == all_ids - dups
 
 
-def test_x8_neardup_owner_state_survives_micro_batches(spark):
+def test_x8_neardup_owner_state_survives_micro_batches(spark, tmp_path):
     """Split the documents across two files and replay one file per
     micro-batch: batch-2 documents must still be deduped against batch-1
     bucket owners (state store), yielding the same kept set as the
@@ -1069,7 +1069,7 @@ def test_x8_neardup_owner_state_survives_micro_batches(spark):
     docs = load_table(spark, SF_DIR, "documents").select(
         "doc_id", "text").toPandas().sort_values("doc_id")
     half = len(docs) // 2
-    stream_dir = tempfile.mkdtemp(prefix="neardup_chunks_")
+    stream_dir = _fresh_dir(tmp_path, "neardup_chunks")
     docs.iloc[:half].to_parquet(os.path.join(stream_dir, "a.parquet"), index=False)
     docs.iloc[half:].to_parquet(os.path.join(stream_dir, "b.parquet"), index=False)
     schema = T.StructType([
@@ -1153,6 +1153,9 @@ def test_stream_source_dir_concurrent_callers_share_one_dir(tmp_path):
         pq.write_table(pa.table({"x": [i]}), str(src / f"part-{i:04d}.parquet"))
     got, errors = [], []
     start = threading.Barrier(16)
+    # Build dirs an earlier run left for this same path are not this run's.
+    pattern = os.path.join(tempfile.gettempdir(), ".events_stream_*")
+    before = set(glob.glob(pattern))
 
     def call():
         start.wait(timeout=60)
@@ -1178,7 +1181,7 @@ def test_stream_source_dir_concurrent_callers_share_one_dir(tmp_path):
     assert sorted(os.listdir(stream_dir)) == [
         f"part-{i:04d}.parquet" for i in range(3)]
     leftovers = [
-        d for d in glob.glob(os.path.join(tempfile.gettempdir(), ".events_stream_*"))
+        d for d in set(glob.glob(pattern)) - before
         if any(os.readlink(os.path.join(d, p)).startswith(str(src))
                for p in os.listdir(d))
     ]
@@ -1849,6 +1852,106 @@ def test_keyed_state_operators_keep_their_state_contract(spark, monkeypatch):
         getattr(state, name)(df, *extra)
         got[name] = calls.pop()
     assert got == STATE_CONTRACT
+
+
+class _FoldState:
+    """The part of ``GroupState`` the folds below use."""
+
+    hasTimedOut = False
+
+    def __init__(self):
+        self.value = None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+
+
+def _concat_sort_run(fold, names):
+    """``keyed_state``'s per-key function as it was before ``_per_key``:
+    always concat and sort, always build a frame."""
+
+    def run(key, pdfs, st):
+        rows = None
+        if not st.hasTimedOut:
+            rows = pd.concat(list(pdfs))
+            rows = rows.sort_values(
+                [c for c in ("ts_ms", "event_id") if c in rows.columns])
+        yield pd.DataFrame([(key[0], *r) for r in fold(rows, st)], columns=names)
+
+    return run
+
+
+def _close_pairs(rows, state):
+    """An interval alert: a row within 50 ms of the key's previous one."""
+    last = state.get[0] if state.exists else None
+    for ts in rows["ts_ms"]:
+        if last is not None and ts - last < 50:
+            yield int(ts), int(ts - last)
+        last = int(ts)
+    state.update((last,))
+
+
+def _row_order(rows, state):
+    """Every row, in the order the fold saw it, numbered across batches."""
+    n = state.get[0] if state.exists else 0
+    for r in rows.itertuples(index=False):
+        yield (n, *(int(v) for v in r[1:]))
+        n += 1
+    state.update((n,))
+
+
+@pytest.mark.parametrize("with_event_id", [True, False])
+@pytest.mark.parametrize("fold", [_close_pairs, _row_order])
+def test_keyed_state_per_key_run_matches_concat_and_sort(fold, with_event_id):
+    """``_per_key`` skips the concat for one chunk, the sort for one row
+    and the frame for a key with no output; over random chunked
+    micro-batches whose sort keys are distinct, its output rows and state
+    equal those of the always-concat-and-sort function."""
+    import numpy as np
+
+    from apache_flink_datastream_api_spark.streaming import state
+
+    rng = np.random.default_rng(7)
+    cols = ["user_id", "ts_ms", "event_id"] if with_event_id else ["user_id", "ts_ms"]
+    sort_by = cols[1:]
+    n_out = 2 if fold is _close_pairs else len(cols)
+    names = ["user_id", *(f"o{i}" for i in range(n_out))]
+    new_run, old_run = state._per_key(fold, names, sort_by), _concat_sort_run(fold, names)
+    new_state, old_state = {}, {}
+    new_out, old_out = [], []
+    next_id = 0
+    for _batch in range(6):
+        for key in range(12):
+            n = int(rng.integers(1, 7))
+            # ts_ms ties only when event_id breaks them
+            ts = (rng.integers(0, 4, n) if with_event_id
+                  else rng.choice(400, n, replace=False)) * 30
+            data = {"user_id": [key] * n, "ts_ms": ts.astype("int64")}
+            if with_event_id:
+                data["event_id"] = rng.permutation(np.arange(next_id, next_id + n))
+                next_id += n
+            rows = pd.DataFrame(data)[cols]
+            cuts = sorted(rng.choice(np.arange(1, n), min(n - 1, int(rng.integers(0, 3))),
+                                     replace=False)) if n > 1 else []
+            bounds = [0, *cuts, n]
+            chunks = [rows.iloc[a:b].reset_index(drop=True) for a, b in zip(bounds, bounds[1:])]
+            new_frames = list(new_run((key,), iter(chunks), new_state.setdefault(key, _FoldState())))
+            old_frames = list(old_run((key,), iter(chunks), old_state.setdefault(key, _FoldState())))
+            assert all(len(f) for f in new_frames)
+            new_out += new_frames
+            old_out += [f for f in old_frames if len(f)]
+    assert {k: s.value for k, s in new_state.items()} == {k: s.value for k, s in old_state.items()}
+    assert len(new_out) == len(old_out) > 0
+    pd.testing.assert_frame_equal(pd.concat(new_out, ignore_index=True),
+                                  pd.concat(old_out, ignore_index=True))
 
 
 def test_keyed_state_is_the_only_apply_in_pandas_with_state_call():
